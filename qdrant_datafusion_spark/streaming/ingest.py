@@ -261,6 +261,16 @@ def streaming_topk(
     )
 
 
+def _jaccard_at_least(a: str, b: str, threshold: float) -> str:
+    """SQL predicate: exact Jaccard of fingerprint arrays ``a``, ``b`` is
+    at least ``threshold``."""
+    inter = f"size(array_intersect({a}, {b}))"
+    return (
+        f"CAST({inter} AS DOUBLE) / (size({a}) + size({b}) - {inter})"
+        f" >= {float(threshold)!r}D"
+    )
+
+
 def stream_near_dup_ingest(
     points: DataFrame,
     store_dir: str,
@@ -282,17 +292,34 @@ def stream_near_dup_ingest(
 
     Mechanics per batch (``foreachBatch`` — the canonical shape for
     join-against-growing-history logic Structured Streaming state can't
-    express):
+    express).  Each batch is read once, signed once and decided once:
 
-    1. in-batch near-dups collapse first (keep min id) — the
-       `minhash_lsh_dups` kernel run over a SHARED signature table:
-       one `_minhash_buckets` pass per batch feeds the collapse, the
-       store check, and the store append (signatures are the expensive
-       stage; everything downstream is bigint joins);
-    2. survivors' banded buckets join the store on the bucket key with
-       exact-Jaccard verification inside the join (the store carries the
-       fingerprint sets, so verification needs no second lookup);
-    3. novel rows and their (id, fingerprint, bucket) signatures append.
+    1. the micro-batch is pinned first and the empty check reads the
+       pin, so the source is scanned exactly once per batch;
+    2. one `_minhash_buckets` pass over the pin gives the pinned
+       signature table ``(_id, _fp, bucket)`` — signatures are the
+       expensive stage, everything downstream is bucket-keyed joins;
+    3. from that one table: the in-batch near-dups (the capped bucket
+       self-join of `minhash_lsh_dups`, exact-Jaccard verified, keep the
+       min id) and the store near-dups (the signatures join the store
+       on the bucket key with exact-Jaccard verification inside the
+       join — the store carries the fingerprint sets, so verification
+       needs no second lookup);
+    4. one anti-join removes the union of both sets, and the survivors
+       are pinned.  Checking the store against every batch signature,
+       not only the in-batch survivors, leaves the survivors unchanged:
+       ``batch − D1 − D2`` is the same set whichever side ``D2`` (the
+       store dups) is computed over;
+    5. the survivors append to ``out_dir``, and their signatures (the
+       pinned signatures semi-joined to the pinned survivors) append to
+       the store;
+    6. every pin is released before the batch returns.  Pins are
+       ``persist``, not ``localCheckpoint``: they keep their lineage, so
+       a lost executor recomputes a block instead of failing the batch.
+
+    The store is read with the signature table's schema plus
+    ``_batch_id int``, so no footer or schema-inference job runs per
+    batch.
 
     Scale: the per-batch work is the batch-sized slice of the batch
     operator (bucket-keyed joins only); the store grows with accepted
@@ -319,8 +346,8 @@ def stream_near_dup_ingest(
     (same guard as `minhash_lsh_dups`); pass ``None`` for the exact
     uncapped contract
     (the oracle-graded gate does), or keep the cap in production where a
-    degenerate hot band bucket must not go O(n²).  Note the store-join
-    stage (2) is already cap-free — the cap only affects stage 1.
+    degenerate hot band bucket must not go O(n²).  The store join is
+    cap-free — the cap only affects the in-batch self-join of step 3.
     """
     from qdrant_datafusion_spark.operators.dedup import (
         _cap_hot_buckets,
@@ -329,98 +356,77 @@ def stream_near_dup_ingest(
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        if not batch.take(1):
-            return
-        # ONE signature pass per batch: the same (id, fp, bucket) rows
-        # drive the in-batch collapse, the store check, and the store
-        # append — signatures are the expensive (Arrow/codegen) stage,
-        # everything after is bigint joins
-        buckets = _minhash_buckets(
-            batch, content_col, id_col, k, num_hashes, bands
-        ).localCheckpoint(eager=False)
-        paired = _cap_hot_buckets(buckets, ["bucket"], max_bucket_size)
-        # 1. collapse in-batch near-dups (keep the smallest id) — same
-        # kernel as minhash_lsh_dups, over the shared bucket rows
-        inter0 = F.size(F.array_intersect(F.col("fp_a"), F.col("fp_b")))
-        union0 = F.size(F.col("fp_a")) + F.size(F.col("fp_b")) - inter0
-        in_batch_dups = (
-            paired.select(
-                F.col("_id").alias("id_a"), F.col("_fp").alias("fp_a"),
-                "bucket",
-            )
-            .join(
-                paired.select(
-                    F.col("_id").alias("id_b"), F.col("_fp").alias("fp_b"),
-                    "bucket",
-                ),
-                "bucket",
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(inter0.cast("double") / union0 >= threshold)
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-        )
-        batch = batch.join(in_batch_dups, id_col, "left_anti")
-        buckets = buckets.join(
-            batch.select(F.col(id_col).alias("_id")), "_id", "left_semi"
-        )
-        # 2. check against the accepted-history store.  Exclude THIS
-        # batch's own partition: on an at-least-once replay (sinks
-        # written, checkpoint not committed) the store already holds
-        # this batch's signatures — without the filter every survivor
-        # would look like a dup.  (The result happened to stay intact
-        # only because dynamic overwrite skips empty outputs; the
-        # exclusion makes the idempotence explicit, not accidental.)
-        from pyspark.errors.exceptions.captured import AnalysisException
+        pins: list[DataFrame] = []
 
-        _guard_store_lifetime(spark, store_dir, int(batch_id))
+        def pin(df: DataFrame) -> DataFrame:
+            pins.append(df.persist())
+            return df
+
         try:
-            store = spark.read.parquet(store_dir).filter(
-                F.col("_batch_id") != F.lit(int(batch_id))
+            batch = pin(batch)
+            if batch.isEmpty():
+                return
+            _guard_store_lifetime(spark, store_dir, int(batch_id))
+            sigs = pin(
+                _minhash_buckets(batch, content_col, id_col, k, num_hashes, bands)
             )
-        except AnalysisException:  # first batch: PATH_NOT_FOUND only —
-            store = None  # any other read failure must fail the batch
-        if store is not None:
-            inter = F.size(F.array_intersect(F.col("_fp"), F.col("_s_fp")))
-            union = F.size(F.col("_fp")) + F.size(F.col("_s_fp")) - inter
-            dup_ids = (
-                buckets.join(
-                    store.select(
-                        F.col("_id").alias("_s_id"),
-                        F.col("_fp").alias("_s_fp"),
-                        "bucket",
-                    ),
-                    "bucket",
-                )
-                .filter(inter.cast("double") / union >= threshold)
-                .select(F.col("_id").alias(id_col))
-                .distinct()
+            # in-batch near-dups: the capped bucket self-join, keep the
+            # smallest id (same kernel as minhash_lsh_dups)
+            paired = _cap_hot_buckets(sigs, ["bucket"], max_bucket_size)
+            dups = (
+                paired.selectExpr("_id AS id_a", "_fp AS fp_a", "bucket")
+                .join(paired.selectExpr("_id AS id_b", "_fp AS fp_b", "bucket"), "bucket")
+                .filter(f"id_a < id_b AND {_jaccard_at_least('fp_a', 'fp_b', threshold)}")
+                .selectExpr(f"id_b AS `{id_col}`")
             )
-            batch = batch.join(dup_ids, id_col, "left_anti")
-        # pin the survivors once: the out_dir and store_dir writes are
-        # two separate actions, and without the pin each re-runs the
-        # whole signature/self-join/store-join lineage (batch-sized
-        # executor state, the micro-batch contract)
-        batch = batch.localCheckpoint(eager=True)
-        # survivors' signatures = the already-computed bucket rows
-        # filtered to surviving ids (a semi-join, NOT a third
-        # signature/pandas-UDF pass over the batch)
-        buckets = buckets.join(
-            batch.select(F.col(id_col).alias("_id")), "_id", "left_semi"
-        )
-        # 3. novel docs out; their signatures into the store — both keyed
-        # by batch id so a replayed batch overwrites itself (idempotent)
-        def sink(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("_batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
+            # store near-dups.  Exclude THIS batch's own partition: on an
+            # at-least-once replay (sinks written, checkpoint not
+            # committed) the store already holds this batch's signatures
+            # — without the filter every survivor would look like a dup.
+            # The explicit schema spares a footer/inference job per batch.
+            from pyspark.errors.exceptions.captured import AnalysisException
+            from pyspark.sql.types import IntegerType, StructField, StructType
 
-        sink(batch, out_dir)
-        sink(buckets, store_dir)
+            store_schema = StructType(
+                sigs.schema.fields + [StructField("_batch_id", IntegerType())]
+            )
+            try:
+                store = (
+                    spark.read.schema(store_schema)
+                    .parquet(store_dir)
+                    .filter(f"_batch_id != {int(batch_id)}")
+                )
+            except AnalysisException:  # first batch: PATH_NOT_FOUND only —
+                store = None  # any other read failure must fail the batch
+            if store is not None:
+                dups = dups.unionByName(
+                    sigs.join(store.selectExpr("_fp AS _s_fp", "bucket"), "bucket")
+                    .filter(_jaccard_at_least("_fp", "_s_fp", threshold))
+                    .selectExpr(f"_id AS `{id_col}`")
+                )
+            survivors = pin(batch.join(dups.distinct(), id_col, "left_anti"))
+
+            # novel docs out; their signatures into the store — both keyed
+            # by batch id so a replayed batch overwrites itself (idempotent)
+            def sink(df: DataFrame, path: str) -> None:
+                (
+                    df.withColumn("_batch_id", F.lit(int(batch_id)))
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("_batch_id")
+                    .parquet(path)
+                )
+
+            sink(survivors, out_dir)
+            sink(
+                sigs.join(survivors.selectExpr(f"`{id_col}` AS _id"), "_id", "left_semi"),
+                store_dir,
+            )
+        finally:
+            # newest first: releasing a pin that a later pin's plan reads
+            # would make Spark re-plan that later pin
+            for df in reversed(pins):
+                df.unpersist()
 
     return (
         points.writeStream.foreachBatch(process)

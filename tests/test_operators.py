@@ -3,7 +3,9 @@ family, ANN — including exact-vs-approximate agreement checks."""
 
 from __future__ import annotations
 
+import hashlib
 import random
+import re
 
 import numpy as np
 import pytest
@@ -397,6 +399,85 @@ class TestDedup:
             ).collect()
         }
         assert got <= exact and len(got) >= 0.9 * len(exact)
+
+
+def _ref_minhash_buckets(doc_id, text, k, num_hashes, bands):
+    """The documented MinHash banding of one document, computed with
+    ``hashlib`` alone: (id, sorted fingerprints, bucket) per band.
+
+    Normalise (trim spaces, lower, collapse runs of the ASCII whitespace
+    class Java's ``\\s`` matches to one space), take the distinct k-word
+    shingles, md5 each; ``h1`` = hex 1-8, ``h2`` = 2·(hex 9-16) + 1,
+    ``hs`` = hex 1-15; hash i of the signature is the min over shingles
+    of ``(h1 + i·h2) mod 4294967291``; band b's bucket is
+    ``md5('b|h..|h..')`` over its slice of the signature."""
+    if text is None:
+        return []
+    norm = re.sub(r"[ \t\n\r\f\x0b]+", " ", text.strip(" ").lower())
+    toks = [t for t in norm.split(" ") if t]
+    digests = [
+        hashlib.md5(" ".join(toks[i : i + k]).encode()).hexdigest()
+        for i in range(len(toks) - k + 1)
+    ]
+    if not digests:
+        return []
+    hh = [(int(d[:8], 16), int(d[8:16], 16) * 2 + 1) for d in digests]
+    fp = tuple(sorted({int(d[:15], 16) for d in digests}))
+    sig = [min((h1 + i * h2) % 4294967291 for h1, h2 in hh) for i in range(num_hashes)]
+    r = num_hashes // bands
+    return [
+        (doc_id, fp, hashlib.md5("|".join(map(str, [b, *sig[b * r : (b + 1) * r]])).encode()).hexdigest())
+        for b in range(bands)
+    ]
+
+
+class TestMinhashBucketsReference:
+    """``minhash_buckets`` is bit-exact with a pure-Python reference of
+    its documented algorithm.  Persisted signature stores are probed with
+    these bucket strings, so any change to them orphans every store
+    written before it."""
+
+    ROWS = [
+        (1, None),
+        (2, ""),
+        (3, " \t\n  \r\n "),
+        (4, "two words"),
+        (5, "the cat sat on the mat the cat sat on the mat the cat sat"),
+        (6, "  Mixed\tCASE\n\nwords\x0b\fand\r\n runs   of  ASCII space "),
+        # non-ASCII spaces are not in Java's \s class: they stay inside
+        # their tokens, alone or in runs
+        (7, "non\u00a0breaking\u2003\u2003space\u3000\u3000\u3000runs stay inside"),
+        (8, "\u00a0\u2002 leading unicode spaces then words follow here"),
+        (9, "naïve café déjà vu über straße naïve café déjà"),
+        (10, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+        (11, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+    ]
+
+    @pytest.mark.parametrize("k,num_hashes,bands", [(3, 32, 16), (2, 12, 4)])
+    def test_bit_exact_with_hashlib_reference(self, spark, docs, k, num_hashes, bands):
+        from qdrant_datafusion_spark.operators.dedup import minhash_buckets
+
+        def rows(df):
+            got = sorted(
+                (r._id, tuple(sorted(r._fp)), r.bucket)
+                for r in minhash_buckets(df, "text", "doc_id", k, num_hashes, bands).collect()
+            )
+            want = sorted(
+                row
+                for d in df.select("doc_id", "text").collect()
+                for row in _ref_minhash_buckets(d.doc_id, d.text, k, num_hashes, bands)
+            )
+            return got, want
+
+        got, want = rows(spark.createDataFrame(self.ROWS, "doc_id long, text string"))
+        assert got == want
+        # the edge rows reach the cases they name: null, blank and
+        # whitespace-only text get no signature, nor does text shorter
+        # than k words
+        ids = {row[0] for row in got}
+        assert ids == {5, 6, 7, 8, 9, 10, 11} | ({4} if k <= 2 else set())
+        got, want = rows(docs)
+        assert got == want and len(got) > 1000
 
 
 class TestAnn:

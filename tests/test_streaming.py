@@ -380,6 +380,73 @@ class TestStreamNearDupIngest:
             drain("ck_reset")  # fresh checkpoint restarts at batch 0
 
 
+    @staticmethod
+    def _file_stream(spark, tmp_path, batches):
+        """One source file per batch, read one file per trigger."""
+        src = str(tmp_path / "src")
+        schema = "doc_id long, text string"
+        for rows in batches:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    BATCHES = [
+        [(1, "the quick brown fox jumps over the lazy dog near the barn"),
+         (2, "completely unrelated content about spark query planning"),
+         (3, "the quick brown fox jumps over the lazy dog near the farm")],
+        [(4, "the quick brown fox jumps over the lazy dog near the barn"),
+         (5, "a genuinely new document discussing vector quantization tiers"),
+         (6, "a genuinely new document discussing vector quantization tiers today"),
+         (7, "another novel text about bucket joins and signature stores")],
+        [(8, "completely unrelated content about spark query planning"),
+         (9, "short")],
+        [(10, "one more fresh document about streaming micro batch pins")],
+    ]
+
+    def test_each_batch_reads_its_source_once(self, spark, tmp_path):
+        """Every step of a batch scans the pinned micro-batch, not the
+        source: a batch's numInputRows equals its source file's rows
+        (an unpinned body re-reads the source once per action)."""
+        from qdrant_datafusion_spark.streaming.ingest import stream_near_dup_ingest
+
+        q = stream_near_dup_ingest(
+            self._file_stream(spark, tmp_path, self.BATCHES[:2]),
+            str(tmp_path / "store"), str(tmp_path / "out"),
+            str(tmp_path / "ckpt"), threshold=0.5,
+        )
+        assert q.awaitTermination(120)
+        assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [3, 4]
+        accepted = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
+        assert accepted == {1, 2, 5, 7}
+
+    def test_batches_release_their_pins(self, spark, tmp_path):
+        """Every pin a batch makes is released before the batch returns:
+        after four batches the context caches no RDD it did not cache
+        before the stream (ids, not a count: JVM GC may drop RDDs that
+        earlier work left cached)."""
+        from qdrant_datafusion_spark.streaming.ingest import stream_near_dup_ingest
+
+        def cached_rdds():
+            return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+        before = cached_rdds()
+        q = stream_near_dup_ingest(
+            self._file_stream(spark, tmp_path, self.BATCHES),
+            str(tmp_path / "store"), str(tmp_path / "out"),
+            str(tmp_path / "ckpt"), threshold=0.5,
+        )
+        assert q.awaitTermination(120)
+        assert len([p for p in q.recentProgress if p.numInputRows]) == 4
+        assert cached_rdds() - before == set()
+        accepted = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
+        assert accepted == {1, 2, 5, 7, 9, 10}
+
+
 class TestStreamApplyChanges:
     SCHEMA = "k long, seq long, op string, val string"
 
