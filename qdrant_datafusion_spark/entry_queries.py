@@ -4164,7 +4164,7 @@ _BOILER_TEXT = (
 _BOILER_BASE = 10_000_000
 
 
-_N_DOCS_MEMO: dict[str, int] = {}
+_N_DOCS_MEMO: dict[str, tuple[SparkSession, int]] = {}
 
 
 def _skew_fixture(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int, int]:
@@ -4173,13 +4173,16 @@ def _skew_fixture(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int, int
     cap = n_docs (≥ ~9× the largest organic block bucket at any scale);
     boiler_n = 2·n_docs (> cap, so every boilerplate bucket is hot).  At
     sf0.01 this is the original literal geometry (cap 500, boiler 1000).
-    n_docs is memoized per sf_dir — four gate queries share the fixture
-    and would otherwise each pay a count() scan of documents.
+    n_docs is memoized per (session, sf_dir) — four gate queries share
+    the fixture and would otherwise each pay a count() scan of documents.
     """
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    n_docs = _N_DOCS_MEMO.get(sf_dir)
-    if n_docs is None:
-        n_docs = _N_DOCS_MEMO[sf_dir] = docs.count()
+    hit = _N_DOCS_MEMO.get(sf_dir)
+    if hit is not None and hit[0] is spark:
+        n_docs = hit[1]
+    else:
+        n_docs = docs.count()
+        _N_DOCS_MEMO[sf_dir] = (spark, n_docs)
     boiler_n = 2 * n_docs
     boiler = spark.range(1, boiler_n + 1).select(
         (F.lit(_BOILER_BASE) + F.col("id")).alias("doc_id"),
@@ -7040,55 +7043,79 @@ def _staggered_batch_files(
     return src
 
 
+def _drain_batches(
+    spark: SparkSession,
+    df: DataFrame,
+    key_col: str,
+    start,
+    readback,
+    key_expr=None,
+) -> DataFrame:
+    """Stream ``df`` in INGEST_BATCHES staggered micro-batches
+    (:func:`_staggered_batch_files`, one file per trigger) through
+    ``start(stream, path)`` — ``path(name)`` names a directory in the
+    run's scratch dir, and the query must write its result to
+    ``path("out")`` — drain it under :func:`_stream_conf`, and return
+    ``readback(result)`` pinned before the scratch dir is removed."""
+    import shutil
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix="sg_ingest_")
+    try:
+        stream = (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(_staggered_batch_files(df, key_col, tmp, key_expr))
+        )
+        # conf scope opens BEFORE start(): the query snapshots session
+        # conf when it starts, and foreachBatch plans run under it
+        with _stream_conf(spark):
+            q = start(stream, lambda name: os.path.join(tmp, name))
+            if not q.awaitTermination(600):
+                q.stop()
+                raise RuntimeError(f"stream {q.id} did not drain in 600s")
+        out = spark.read.parquet(os.path.join(tmp, "out"))
+        return readback(out).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _survivor_batches(id_col: str):
+    """Readback of a store-join ingest's output: ``(id, batch_id)``."""
+    return lambda out: out.select(
+        id_col, F.col("_batch_id").cast("long").alias("batch_id")
+    )
+
+
 def streaming_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stream_near_dup_ingest end-to-end: documents stream in forced
     micro-batches through the MinHash-LSH ingest filter (in-batch
     collapse + signature-store check, foreachBatch with idempotent
     _batch_id-partitioned sinks); survivors are graded against the
     unrolled sequential-greedy oracle."""
-    import shutil
-    import tempfile
-
     from qdrant_datafusion_spark.streaming.ingest import (
         stream_near_dup_ingest,
     )
 
-    docs = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="sg_neardup_ingest_")
-    try:
-        src = _staggered_batch_files(docs, "doc_id", tmp)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        # conf scope opens BEFORE start(): the query snapshots session
-        # conf when it starts, and foreachBatch plans run under it
-        with _stream_conf(spark):
-            q = stream_near_dup_ingest(
-                stream,
-                store_dir=os.path.join(tmp, "store"),
-                out_dir=os.path.join(tmp, "out"),
-                checkpoint_dir=os.path.join(tmp, "ckpt"),
-                content_col="text",
-                id_col="doc_id",
-                k=3,
-                num_hashes=32,
-                bands=16,
-                threshold=0.2,
-                max_bucket_size=None,  # oracle models the UNCAPPED pair set
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("near-dup ingest did not drain in 600s")
-        surv = (
-            spark.read.parquet(os.path.join(tmp, "out"))
-            .select("doc_id", F.col("_batch_id").cast("long").alias("batch_id"))
-            .localCheckpoint(eager=True)  # pin before the source dirs die
-        )
-        return surv
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _drain_batches(
+        spark,
+        _t(spark, sf_dir, "documents"),
+        "doc_id",
+        lambda stream, path: stream_near_dup_ingest(
+            stream,
+            store_dir=path("store"),
+            out_dir=path("out"),
+            checkpoint_dir=path("ckpt"),
+            content_col="text",
+            id_col="doc_id",
+            k=3,
+            num_hashes=32,
+            bands=16,
+            threshold=0.2,
+            max_bucket_size=None,  # oracle models the UNCAPPED pair set
+        ),
+        _survivor_batches("doc_id"),
+    )
 
 
 def _ingest_stages_sql(id_col: str, pair_cte: str) -> str:
@@ -7153,45 +7180,28 @@ def streaming_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches through the hyperplane-LSH semantic filter (corpus-
     scaled pool slice — same planes as dedup_embedding_lsh ⇒
     deterministic buckets ⇒ full value oracle)."""
-    import shutil
-    import tempfile
-
     from qdrant_datafusion_spark.streaming.ingest import (
         stream_semantic_ingest,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="sg_semantic_ingest_")
-    try:
-        src = _staggered_batch_files(emb, "vec_id", tmp)
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        with _stream_conf(spark):
-            q = stream_semantic_ingest(
-                stream,
-                store_dir=os.path.join(tmp, "store"),
-                out_dir=os.path.join(tmp, "out"),
-                checkpoint_dir=os.path.join(tmp, "ckpt"),
-                vector_col="embedding",
-                id_col="vec_id",
-                bucket_planes=_emb_lsh_planes_for(emb),
-                tables=EMB_LSH_TABLES,
-                threshold=0.35,
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("semantic ingest did not drain in 600s")
-        surv = (
-            spark.read.parquet(os.path.join(tmp, "out"))
-            .select("vec_id", F.col("_batch_id").cast("long").alias("batch_id"))
-            .localCheckpoint(eager=True)
-        )
-        return surv
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _drain_batches(
+        spark,
+        emb,
+        "vec_id",
+        lambda stream, path: stream_semantic_ingest(
+            stream,
+            store_dir=path("store"),
+            out_dir=path("out"),
+            checkpoint_dir=path("ckpt"),
+            vector_col="embedding",
+            id_col="vec_id",
+            bucket_planes=_emb_lsh_planes_for(emb),
+            tables=EMB_LSH_TABLES,
+            threshold=0.35,
+        ),
+        _survivor_batches("vec_id"),
+    )
 
 
 STREAMING_SEMANTIC_INGEST_SQL = _ingest_stages_sql(
@@ -10589,9 +10599,6 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by touched buckets.  The drained store must equal the
     full-changelog latest-state fold (CDC_LATEST_STATE_SQL oracle):
     streaming MERGE == batch MERGE, value-hashed."""
-    import shutil
-    import tempfile
-
     from qdrant_datafusion_spark.streaming.ingest import (
         stream_apply_changes,
     )
@@ -10600,42 +10607,25 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = int(
         ev.agg(F.expr("CAST(percentile(ts, 0.5) AS BIGINT)")).collect()[0][0]
     )
-    tmp = tempfile.mkdtemp(prefix="sg_cdc_apply_")
-    try:
-        src = _staggered_batch_files(
-            ev,
-            "user_id",
-            tmp,
-            key_expr=(F.col("ts") > cutoff).cast("int"),
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        with _stream_conf(spark):
-            q = stream_apply_changes(
-                stream,
-                snapshot_dir=os.path.join(tmp, "snap"),
-                checkpoint_dir=os.path.join(tmp, "ckpt"),
-                key_cols=["user_id"],
-                order_cols=["ts", "event_id"],
-                op_col="event_type",
-                delete_ops=("error",),
-                n_buckets=16,
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("cdc apply did not drain in 600s")
-        out = (
-            spark.read.parquet(os.path.join(tmp, "snap"))
-            .select("user_id", "ts", "event_id", "event_type", "v_micro")
-            .orderBy("user_id")
-            .localCheckpoint(eager=True)  # pin before the source dirs die
-        )
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _drain_batches(
+        spark,
+        ev,
+        "user_id",
+        lambda stream, path: stream_apply_changes(
+            stream,
+            snapshot_dir=path("out"),
+            checkpoint_dir=path("ckpt"),
+            key_cols=["user_id"],
+            order_cols=["ts", "event_id"],
+            op_col="event_type",
+            delete_ops=("error",),
+            n_buckets=16,
+        ),
+        lambda out: out.select(
+            "user_id", "ts", "event_id", "event_type", "v_micro"
+        ).orderBy("user_id"),
+        key_expr=(F.col("ts") > cutoff).cast("int"),
+    )
 
 
 QUERIES["streaming_cdc_apply"] = streaming_cdc_apply
@@ -10787,48 +10777,29 @@ def streaming_paragraph_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals ONE global first-occurrence pass in arrival order — the
     oracle is the batch-global SQL re-ranked by (batch, doc, pos), with
     no recall caveats."""
-    import shutil
-    import tempfile
-
     from qdrant_datafusion_spark.streaming.ingest import (
         stream_paragraph_ingest,
     )
 
-    docs = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="sg_para_ingest_")
-    try:
-        src = _staggered_batch_files(docs, "doc_id", tmp)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        with _stream_conf(spark):
-            q = stream_paragraph_ingest(
-                stream,
-                store_dir=os.path.join(tmp, "store"),
-                out_dir=os.path.join(tmp, "out"),
-                checkpoint_dir=os.path.join(tmp, "ckpt"),
-                units=_word_windows(F.col("text"), PARA_W),
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("paragraph ingest did not drain in 600s")
-        out = (
-            spark.read.parquet(os.path.join(tmp, "out"))
-            .select(
-                "doc_id",
-                "n_units",
-                "n_kept",
-                "kept_text",
-                F.col("_batch_id").cast("long").alias("batch_id"),
-            )
-            .orderBy("doc_id")
-            .localCheckpoint(eager=True)  # pin before the source dirs die
-        )
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _drain_batches(
+        spark,
+        _t(spark, sf_dir, "documents"),
+        "doc_id",
+        lambda stream, path: stream_paragraph_ingest(
+            stream,
+            store_dir=path("store"),
+            out_dir=path("out"),
+            checkpoint_dir=path("ckpt"),
+            units=_word_windows(F.col("text"), PARA_W),
+        ),
+        lambda out: out.select(
+            "doc_id",
+            "n_units",
+            "n_kept",
+            "kept_text",
+            F.col("_batch_id").cast("long").alias("batch_id"),
+        ).orderBy("doc_id"),
+    )
 
 
 STREAMING_PARAGRAPH_INGEST_SQL = f"""

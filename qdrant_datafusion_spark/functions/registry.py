@@ -193,7 +193,9 @@ def _maxsim_batch(mv: pd.Series, q: pd.Series) -> pd.Series:
 #: idempotent (CREATE OR REPLACE + udf.register), but each call parses
 #: ~20 DDL statements and re-wraps 7 Python UDFs — ~0.3s of driver-side
 #: work per call (guide §7.3).  Holding the session object keeps its
-#: id() from being reused by a successor session.
+#: id() from being reused by a successor session; stopped sessions are
+#: dropped on every lookup, so a process that recreates sessions does
+#: not keep the dead ones alive.
 _REGISTERED_SESSIONS: list[SparkSession] = []
 
 
@@ -202,6 +204,9 @@ def register_all(spark: SparkSession) -> None:
 
     Idempotent and memoized per live session — repeat calls on a session
     that already has the surface installed are a no-op."""
+    _REGISTERED_SESSIONS[:] = [
+        s for s in _REGISTERED_SESSIONS if s.sparkContext._jsc is not None
+    ]  # a stopped session's context has no JVM handle
     if any(s is spark for s in _REGISTERED_SESSIONS):
         return
 

@@ -15,7 +15,9 @@ from qdrant_datafusion_spark.streaming.ingest import (  # noqa: F401
     stream_collection_writer,
     stream_dedup_exact,
     stream_interval_join,
+    stream_near_dup_ingest,
     stream_paragraph_ingest,
+    stream_semantic_ingest,
     streaming_funnel,
     streaming_topk,
     windowed_event_counts,

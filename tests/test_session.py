@@ -39,26 +39,43 @@ class TestSessionScaleConfigs:
         # literal relation or be immediately re-spread (fan_out /
         # repartition) before heavy per-row work — reviewed sites are
         # pinned here; adding a new one requires re-review.
+        import ast
         import glob
         import os
-        import re
 
         pkg = os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             "qdrant_datafusion_spark",
         )
-        # (file, enclosing def) pairs for each RDD-relation call
+
+        def is_rdd_relation(call: ast.Call) -> bool:
+            # x.parallelize(...), or .range(...) on a receiver named
+            # spark / sparkSession (spark.range, df.sparkSession.range)
+            f = call.func
+            if not isinstance(f, ast.Attribute):
+                return False
+            if f.attr == "parallelize":
+                return True
+            owner = f.value
+            name = owner.id if isinstance(owner, ast.Name) else getattr(owner, "attr", None)
+            return f.attr == "range" and name in ("spark", "sparkSession")
+
+        # (file, innermost enclosing def) pairs for each RDD-relation
+        # call; calls outside any def count as "<module>"
         found = set()
+
+        def walk(node: ast.AST, rel: str, owner: str) -> None:
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    walk(child, rel, child.name)
+                    continue
+                if isinstance(child, ast.Call) and is_rdd_relation(child):
+                    found.add((rel, owner))
+                walk(child, rel, owner)
+
         for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-            rel = os.path.relpath(path, pkg)
-            current_def = "<module>"
             with open(path, encoding="utf-8") as f:
-                for line in f:
-                    m = re.match(r"\s*def\s+(\w+)", line)
-                    if m:
-                        current_def = m.group(1)
-                    if re.search(r"\bspark\.range\(|sparkSession\.range\(|\.parallelize\(", line):
-                        found.add((rel, current_def))
+                walk(ast.parse(f.read()), os.path.relpath(path, pkg), "<module>")
         allowed = {
             # boilerplate-skew fixtures: 2x n_docs rows of one constant
             # string, consumed ONLY by signature builders that fan_out
@@ -110,3 +127,30 @@ class TestSessionScaleConfigs:
         # below the bind threshold (the guide §1.4 count() trap)
         occupied = len(df.groupBy("p").agg(F.sum("s")).collect())
         assert occupied >= 2, f"byte-heavy shuffle collapsed to {occupied}"
+
+
+class TestSessionScopedMemos:
+    """Per-session memos must not serve, or keep alive, another session.
+    Stub sessions stand in for stopped or foreign ones, so the shared
+    test session is never stopped."""
+
+    def test_register_all_drops_stopped_sessions(self, spark):
+        from types import SimpleNamespace
+
+        from qdrant_datafusion_spark.functions import registry
+
+        stopped = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
+        registry._REGISTERED_SESSIONS.append(stopped)
+        registry.register_all(spark)
+        assert all(s is not stopped for s in registry._REGISTERED_SESSIONS)
+        assert any(s is spark for s in registry._REGISTERED_SESSIONS)
+
+    def test_n_docs_memo_is_keyed_on_the_session(self, spark, sf_dir):
+        from qdrant_datafusion_spark import entry_queries as eq
+
+        other = object()  # another session's entry for the same sf_dir
+        eq._N_DOCS_MEMO[sf_dir] = (other, -1)
+        _, n_docs, boiler_n = eq._skew_fixture(spark, sf_dir)
+        assert n_docs == eq._t(spark, sf_dir, "documents").count() > 0
+        assert boiler_n == 2 * n_docs
+        assert eq._N_DOCS_MEMO[sf_dir] == (spark, n_docs)

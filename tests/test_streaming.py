@@ -3,14 +3,20 @@ sink, driven synchronously with availableNow/processAllAvailable."""
 
 from __future__ import annotations
 
+from collections import namedtuple
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from qdrant_datafusion_spark.streaming import (
     sessionized_counts,
+    stream_apply_changes,
     stream_collection_writer,
     stream_dedup_exact,
+    stream_near_dup_ingest,
+    stream_paragraph_ingest,
+    stream_semantic_ingest,
     windowed_event_counts,
 )
 
@@ -245,6 +251,84 @@ class TestStreamingPipelineStages:
         assert len(stats) == 40 and all(r.n_tokens == 5 for r in stats)
 
 
+#: one input per foreachBatch body: the output directory is ``out``;
+#: ``kept`` selects the accepted rows, keyed by ``key``, after the first
+#: two batches (3 and 4 rows) and after all four (3, 4, 2 and 1 rows)
+Body = namedtuple("Body", "schema batches start key kept after_two after_four")
+
+DOC_BATCHES = [
+    [(1, "the quick brown fox jumps over the lazy dog near the barn"),
+     (2, "completely unrelated content about spark query planning"),
+     (3, "the quick brown fox jumps over the lazy dog near the farm")],
+    [(4, "the quick brown fox jumps over the lazy dog near the barn"),
+     (5, "a genuinely new document discussing vector quantization tiers"),
+     (6, "a genuinely new document discussing vector quantization tiers today"),
+     (7, "another novel text about bucket joins and signature stores")],
+    [(8, "completely unrelated content about spark query planning"),
+     (9, "short")],
+    [(10, "one more fresh document about streaming micro batch pins")],
+]
+
+FOREACH_BATCH_BODIES = [
+    pytest.param(
+        Body(
+            "doc_id long, text string", DOC_BATCHES,
+            lambda s, d: stream_near_dup_ingest(
+                s, d("store"), d("out"), d("ckpt"), threshold=0.5
+            ),
+            "doc_id", "true", [1, 2, 5, 7], [1, 2, 5, 7, 9, 10],
+        ),
+        id="near_dup",
+    ),
+    pytest.param(
+        # each text is one unit; a repeated text keeps none of it
+        Body(
+            "doc_id long, text string", DOC_BATCHES,
+            lambda s, d: stream_paragraph_ingest(s, d("store"), d("out"), d("ckpt")),
+            "doc_id", "n_kept > 0", [1, 2, 3, 5, 6, 7], [1, 2, 3, 5, 6, 7, 9, 10],
+        ),
+        id="paragraph",
+    ),
+    pytest.param(
+        Body(
+            "vec_id long, embedding array<float>",
+            [
+                [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]),
+                 (3, [1.0, 0.02, 0.0, 0.0])],
+                [(4, [1.0, 0.0, 0.0, 0.0]), (5, [0.0, 0.0, 1.0, 0.0]),
+                 (6, [0.0, 0.0, 1.0, 0.01]), (7, [0.0, 0.0, 0.0, 1.0])],
+                [(8, [0.0, 1.0, 0.0, 0.0]), (9, [1.0, 1.0, 0.0, 0.0])],
+                [(10, [0.0, 1.0, 1.0, 0.0])],
+            ],
+            lambda s, d: stream_semantic_ingest(
+                s, d("store"), d("out"), d("ckpt"), threshold=0.99
+            ),
+            "vec_id", "true", [1, 2, 5, 7], [1, 2, 5, 7, 9, 10],
+        ),
+        id="semantic",
+    ),
+    pytest.param(
+        Body(
+            "k long, seq long, op string, val string",
+            [
+                [(1, 10, "upsert", "a"), (2, 11, "upsert", "b"),
+                 (3, 12, "upsert", "c")],
+                [(1, 20, "upsert", "a2"), (2, 21, "delete", None),
+                 (4, 22, "upsert", "d"), (4, 23, "upsert", "d2")],
+                [(5, 30, "upsert", "e"), (3, 31, "delete", None)],
+                [(6, 40, "upsert", "f")],
+            ],
+            lambda s, d: stream_apply_changes(
+                s, d("out"), d("ckpt"), key_cols=["k"], order_cols=["seq"],
+                op_col="op", n_buckets=8,
+            ),
+            "k", "true", [1, 3, 4], [1, 4, 5, 6],
+        ),
+        id="apply_changes",
+    ),
+]
+
+
 class TestStreamNearDupIngest:
     def test_cross_batch_near_dups_are_dropped(self, spark, tmp_path):
         """Two file-source batches: batch 2 contains a near-copy of a
@@ -381,10 +465,9 @@ class TestStreamNearDupIngest:
 
 
     @staticmethod
-    def _file_stream(spark, tmp_path, batches):
+    def _file_stream(spark, tmp_path, schema, batches):
         """One source file per batch, read one file per trigger."""
         src = str(tmp_path / "src")
-        schema = "doc_id long, text string"
         for rows in batches:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
@@ -395,56 +478,42 @@ class TestStreamNearDupIngest:
             .parquet(src)
         )
 
-    BATCHES = [
-        [(1, "the quick brown fox jumps over the lazy dog near the barn"),
-         (2, "completely unrelated content about spark query planning"),
-         (3, "the quick brown fox jumps over the lazy dog near the farm")],
-        [(4, "the quick brown fox jumps over the lazy dog near the barn"),
-         (5, "a genuinely new document discussing vector quantization tiers"),
-         (6, "a genuinely new document discussing vector quantization tiers today"),
-         (7, "another novel text about bucket joins and signature stores")],
-        [(8, "completely unrelated content about spark query planning"),
-         (9, "short")],
-        [(10, "one more fresh document about streaming micro batch pins")],
-    ]
+    @classmethod
+    def _drain(cls, spark, tmp_path, body, batches):
+        """Run ``body`` over ``batches``; returns the query and the sorted
+        keys of the output rows that ``body.kept`` selects."""
+        q = body.start(
+            cls._file_stream(spark, tmp_path, body.schema, batches),
+            lambda name: str(tmp_path / name),
+        )
+        assert q.awaitTermination(120)
+        out = spark.read.parquet(str(tmp_path / "out")).where(body.kept)
+        return q, sorted(r[body.key] for r in out.collect())
 
-    def test_each_batch_reads_its_source_once(self, spark, tmp_path):
+    @pytest.mark.parametrize("body", FOREACH_BATCH_BODIES)
+    def test_each_batch_reads_its_source_once(self, spark, tmp_path, body):
         """Every step of a batch scans the pinned micro-batch, not the
         source: a batch's numInputRows equals its source file's rows
         (an unpinned body re-reads the source once per action)."""
-        from qdrant_datafusion_spark.streaming.ingest import stream_near_dup_ingest
-
-        q = stream_near_dup_ingest(
-            self._file_stream(spark, tmp_path, self.BATCHES[:2]),
-            str(tmp_path / "store"), str(tmp_path / "out"),
-            str(tmp_path / "ckpt"), threshold=0.5,
-        )
-        assert q.awaitTermination(120)
+        q, kept = self._drain(spark, tmp_path, body, body.batches[:2])
         assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [3, 4]
-        accepted = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-        assert accepted == {1, 2, 5, 7}
+        assert kept == body.after_two
 
-    def test_batches_release_their_pins(self, spark, tmp_path):
+    @pytest.mark.parametrize("body", FOREACH_BATCH_BODIES)
+    def test_batches_release_their_pins(self, spark, tmp_path, body):
         """Every pin a batch makes is released before the batch returns:
         after four batches the context caches no RDD it did not cache
         before the stream (ids, not a count: JVM GC may drop RDDs that
         earlier work left cached)."""
-        from qdrant_datafusion_spark.streaming.ingest import stream_near_dup_ingest
 
         def cached_rdds():
             return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
         before = cached_rdds()
-        q = stream_near_dup_ingest(
-            self._file_stream(spark, tmp_path, self.BATCHES),
-            str(tmp_path / "store"), str(tmp_path / "out"),
-            str(tmp_path / "ckpt"), threshold=0.5,
-        )
-        assert q.awaitTermination(120)
+        q, kept = self._drain(spark, tmp_path, body, body.batches)
         assert len([p for p in q.recentProgress if p.numInputRows]) == 4
         assert cached_rdds() - before == set()
-        accepted = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-        assert accepted == {1, 2, 5, 7, 9, 10}
+        assert kept == body.after_four
 
 
 class TestStreamApplyChanges:
@@ -568,6 +637,26 @@ class TestStreamApplyChanges:
             sorted(map(tuple, spark.read.parquet(snap).collect()))
             == converged
         )
+
+    def test_tombstoned_bucket_dropped_under_a_uri_snapshot_dir(
+        self, spark, tmp_path
+    ):
+        """A bucket whose every key is tombstoned is deleted through
+        Hadoop's FileSystem, so a ``file://`` snapshot dir drops it just
+        as a plain path does (a local-path delete is a silent no-op on
+        a URI, which resurrects the deleted key)."""
+        src = str(tmp_path / "src")
+        snap = (tmp_path / "snap").as_uri()
+        ck = str(tmp_path / "ck")
+        for rows in (
+            [(1, 10, "upsert", "a"), (2, 11, "upsert", "b")],
+            [(1, 20, "delete", None)],  # k=1 is alone in its bucket
+        ):
+            spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+            self._drain(spark, src, snap, ck)
+        assert sorted(r["k"] for r in spark.read.parquet(snap).collect()) == [2]
 
     def test_untouched_buckets_not_rewritten(self, spark, tmp_path):
         import glob
