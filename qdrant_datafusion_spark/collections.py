@@ -36,6 +36,8 @@ import pandas as pd  # module-level: pandas_udf resolves string hints here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from qdrant_datafusion_spark.session import Pins
+
 #: distance metrics a vector field can declare (reference e2e tests configure
 #: Cosine / Dot / Euclid per field — tests/e2e.rs:127-148).
 METRICS = ("cosine", "dot", "euclid", "manhattan")
@@ -324,14 +326,15 @@ class CollectionCatalog:
         from pyspark.sql import functions as F
 
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        df = self.load(name).cache()
+        pin = Pins()
         try:
+            df = pin(self.load(name))
             total = df.count()
             kept = df.filter(~cond | cond.isNull())
             kept_n = kept.count()
             self._rewrite(name, kept)
         finally:
-            df.unpersist()
+            pin.release()
         return total - kept_n
 
     def update_payload(self, name: str, predicate, patch: dict) -> int:
@@ -359,8 +362,9 @@ class CollectionCatalog:
 
             return payload.map(one)
 
-        df = self.load(name).cache()
+        pin = Pins()
         try:
+            df = pin(self.load(name))
             # split-and-union rather than when(cond, udf): a Python UDF
             # inside when() is hoisted to an unconditional ArrowEvalPython
             # node, which would run the JSON merge over EVERY row
@@ -371,5 +375,5 @@ class CollectionCatalog:
             )
             self._rewrite(name, out)
         finally:
-            df.unpersist()
+            pin.release()
         return updated

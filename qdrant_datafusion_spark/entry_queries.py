@@ -54,29 +54,22 @@ from qdrant_datafusion_spark.operators.dedup import (
     simhash_dups,
     simhash_hot_buckets,
 )
-from qdrant_datafusion_spark.session import fan_out
-
-
-#: fixture-relation memo (path -> (session, DataFrame)): re-reading the
-#: same immutable fixture file re-runs driver-side schema inference
-#: (footer read + a fresh FileIndex) on EVERY call — measured ~80ms per
-#: spark.read.parquet vs ~5ms reusing the relation, across ~300 reads
-#: per bench run (guide §7.3 driver-side planning cost).  The memo holds
-#: only the UNEXECUTED logical plan — no rows, no executor state; every
-#: action still scans the parquet, so this is plan reuse, not result
-#: caching.  Stores/sinks whose contents change between reads (streaming
-#: store dirs, tmp write-read gates) never go through here.
-_TABLE_MEMO: dict[str, tuple[SparkSession, DataFrame]] = {}
+from qdrant_datafusion_spark.session import fan_out, shared_build
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The fixture relation ``sf_dir/name.parquet``, read once per
+    session: re-reading the same immutable file re-runs driver-side
+    schema inference (footer read + a fresh FileIndex) on EVERY call —
+    measured ~80ms per spark.read.parquet vs ~5ms reusing the relation,
+    across ~300 reads per bench run (guide §7.3 driver-side planning
+    cost).  Only the UNEXECUTED logical plan is shared — no rows, no
+    executor state; every action still scans the parquet, so this is
+    plan reuse, not result caching.  Stores/sinks whose contents change
+    between reads (streaming store dirs, tmp write-read gates) never go
+    through here."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    hit = _TABLE_MEMO.get(path)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    df = spark.read.parquet(path)
-    _TABLE_MEMO[path] = (spark, df)
-    return df
+    return shared_build(spark, path, lambda pin: spark.read.parquet(path))
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1248,29 +1241,22 @@ GROUP BY md5(lower(trim(text)))
 """
 
 
-#: (sf_dir -> (session, pinned pair table)).  Four gates run the identical
-#: exact 3-shingle Jaccard pair computation (dedup_ngram_jaccard,
-#: dedup_clusters, pipeline_group_split, dedup_source_overlap — k=3,
-#: threshold=0.2): one shingle-explode self-join per (session, sf_dir)
-#: instead of four, the _doc_minhash_buckets memo pattern (guide §2.4 —
-#: remove repeated shuffles outright; the production mirror is a persisted
-#: near-dup pair table maintained alongside the corpus).
-_JACCARD_PAIRS_MEMO: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact-Jaccard near-dup pair table (id_a, id_b, inter, n_union,
     jaccard) over documents at the shared gate parameters (k=3,
-    threshold=0.2), built once per (session, sf_dir) and eagerly pinned."""
-    hit = _JACCARD_PAIRS_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    docs = _t(spark, sf_dir, "documents")
-    p = ngram_jaccard_dups(
-        docs, "text", "doc_id", k=3, threshold=0.2
-    ).localCheckpoint(eager=True)
-    _JACCARD_PAIRS_MEMO[sf_dir] = (spark, p)
-    return p
+    threshold=0.2), built once per (session, sf_dir) and eagerly pinned.
+    Four gates read it (dedup_ngram_jaccard, dedup_clusters,
+    pipeline_group_split, dedup_source_overlap): one shingle-explode
+    self-join instead of four (guide §2.4 — remove repeated shuffles
+    outright; the production mirror is a persisted near-dup pair table
+    maintained alongside the corpus)."""
+
+    def build(pin):
+        docs = _t(spark, sf_dir, "documents")
+        pairs = ngram_jaccard_dups(docs, "text", "doc_id", k=3, threshold=0.2)
+        return pin(pairs, lineage=False)
+
+    return shared_build(spark, ("jaccard_pairs", sf_dir), build)
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1294,29 +1280,21 @@ WHERE {_J_INTER} > 0
 """
 
 
-#: (sf_dir -> (session, pinned bucket table)).  Five MinHash gates share
-#: ONE signature/bucket build per (session, sf_dir) — the _knn_edges memo
-#: pattern.  All five use the same build parameters (k=3, 32 hashes, 16
-#: bands); per-gate differences (cap, corpus/batch split, boilerplate
-#: union) are derived FROM the table, never by rebuilding it.  The
-#: library mirror of this harness memo is the persisted signature table
-#: (dedup.minhash_buckets + write.bucketBy) a production deployment
-#: maintains across ingests.
-_MINHASH_BUCKETS_MEMO: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _doc_minhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banded MinHash bucket table over documents at the shared gate
-    parameters, built once per (session, sf_dir) and eagerly pinned."""
-    hit = _MINHASH_BUCKETS_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    docs = _t(spark, sf_dir, "documents")
-    b = minhash_buckets(
-        docs, "text", "doc_id", k=3, num_hashes=32, bands=16
-    ).localCheckpoint(eager=True)
-    _MINHASH_BUCKETS_MEMO[sf_dir] = (spark, b)
-    return b
+    parameters (k=3, 32 hashes, 16 bands), built once per
+    (session, sf_dir) and eagerly pinned.  The MinHash gates derive
+    their differences (cap, corpus/batch split, boilerplate union) FROM
+    the table, never by rebuilding it; the library mirror is the
+    persisted signature table (dedup.minhash_buckets + write.bucketBy) a
+    production deployment maintains across ingests."""
+
+    def build(pin):
+        docs = _t(spark, sf_dir, "documents")
+        b = minhash_buckets(docs, "text", "doc_id", k=3, num_hashes=32, bands=16)
+        return pin(b, lineage=False)
+
+    return shared_build(spark, ("minhash", sf_dir), build)
 
 
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1362,29 +1340,20 @@ def dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (sf_dir -> (session, pinned bucket table)).  The three SimHash gates
-#: (dedup_simhash, dedup_simhash_capped, dedup_simhash_hot) share one
-#: signature/bucket build per (session, sf_dir) at the common geometry
-#: (max_hamming=4, blocks=5) — the _MINHASH_BUCKETS_MEMO pattern (guide
-#: §2.4); the capped gates union a boilerplate-only build (per-doc
-#: independence makes the union exact, as for MinHash).
-_SIMHASH_BUCKETS_MEMO: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _doc_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exploded SimHash block-bucket table over documents at the
-    shared gate geometry, built once per (session, sf_dir) and pinned."""
+    shared gate geometry (max_hamming=4, blocks=5), built once per
+    (session, sf_dir) and pinned; the three SimHash gates read it, and
+    the capped ones union a boilerplate-only build (per-doc independence
+    makes the union exact, as for MinHash)."""
     from qdrant_datafusion_spark.operators.dedup import simhash_buckets
 
-    hit = _SIMHASH_BUCKETS_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    docs = _t(spark, sf_dir, "documents")
-    b = simhash_buckets(
-        docs, "text", "doc_id", max_hamming=4, blocks=5
-    ).localCheckpoint(eager=True)
-    _SIMHASH_BUCKETS_MEMO[sf_dir] = (spark, b)
-    return b
+    def build(pin):
+        docs = _t(spark, sf_dir, "documents")
+        b = simhash_buckets(docs, "text", "doc_id", max_hamming=4, blocks=5)
+        return pin(b, lineage=False)
+
+    return shared_build(spark, ("simhash", sf_dir), build)
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1564,27 +1533,19 @@ GROUP BY source
 """
 
 
-#: (sf_dir -> (session, pinned exact pair table)).  dedup_embedding and
-#: dedup_embedding_recall both need the identical exact all-pairs cosine
-#: table at threshold 0.35 — one blocked-GEMM grid per (session, sf_dir)
-#: instead of two (the _doc_minhash_buckets memo pattern, guide §2.4).
-_EMB_EXACT_PAIRS_MEMO: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _emb_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact embedding-cosine pair table (id_a, id_b, cosine) at the
-    shared gate threshold, built once per (session, sf_dir) and pinned."""
+    shared gate threshold 0.35, built once per (session, sf_dir) and
+    pinned: dedup_embedding and dedup_embedding_recall share one
+    blocked-GEMM grid instead of two."""
     from qdrant_datafusion_spark.operators.dedup import embedding_near_dups
 
-    hit = _EMB_EXACT_PAIRS_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    emb = _t(spark, sf_dir, "embeddings")
-    p = embedding_near_dups(
-        emb, "embedding", "vec_id", threshold=0.35
-    ).localCheckpoint(eager=True)
-    _EMB_EXACT_PAIRS_MEMO[sf_dir] = (spark, p)
-    return p
+    def build(pin):
+        emb = _t(spark, sf_dir, "embeddings")
+        p = embedding_near_dups(emb, "embedding", "vec_id", threshold=0.35)
+        return pin(p, lineage=False)
+
+    return shared_build(spark, ("emb_exact_pairs", sf_dir), build)
 
 
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4164,84 +4125,53 @@ _BOILER_TEXT = (
 _BOILER_BASE = 10_000_000
 
 
-_N_DOCS_MEMO: dict[str, tuple[SparkSession, int]] = {}
-
-
-def _skew_fixture(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int, int]:
-    """(documents ∪ 2·n_docs boilerplate rows, cap, boiler_n).
+def _skew_fixture(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, int]:
+    """(documents ∪ boilerplate rows, the boilerplate rows alone, cap).
 
     cap = n_docs (≥ ~9× the largest organic block bucket at any scale);
-    boiler_n = 2·n_docs (> cap, so every boilerplate bucket is hot).  At
-    sf0.01 this is the original literal geometry (cap 500, boiler 1000).
-    n_docs is memoized per (session, sf_dir) — four gate queries share
-    the fixture and would otherwise each pay a count() scan of documents.
+    the boilerplate has boiler_n = 2·cap rows (> cap, so every
+    boilerplate bucket is hot).  At sf0.01 this is the original literal
+    geometry (cap 500, boiler 1000).  n_docs is counted once per
+    (session, sf_dir) — four gate queries share the fixture and would
+    otherwise each pay a count() scan of documents.
     """
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    hit = _N_DOCS_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        n_docs = hit[1]
-    else:
-        n_docs = docs.count()
-        _N_DOCS_MEMO[sf_dir] = (spark, n_docs)
-    boiler_n = 2 * n_docs
-    boiler = spark.range(1, boiler_n + 1).select(
+    n_docs = shared_build(spark, ("n_docs", sf_dir), lambda pin: docs.count())
+    boiler = spark.range(1, 2 * n_docs + 1).select(
         (F.lit(_BOILER_BASE) + F.col("id")).alias("doc_id"),
         F.lit(_BOILER_TEXT).alias("text"),
     )
-    return docs.unionByName(boiler), n_docs, boiler_n
+    return docs.unionByName(boiler), boiler, n_docs
 
 
 def _skew_minhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucket table for the skewed fixture = the memoized documents
+    """Bucket table for the skewed fixture = the shared documents
     table ∪ a boilerplate-only build (per-doc independence makes the
     union exact) — the organic half is never re-shingled."""
-    key = sf_dir + "#skew"
-    hit = _MINHASH_BUCKETS_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    _, n_docs, boiler_n = _skew_fixture(spark, sf_dir)
-    boiler = spark.range(1, boiler_n + 1).select(
-        (F.lit(_BOILER_BASE) + F.col("id")).alias("doc_id"),
-        F.lit(_BOILER_TEXT).alias("text"),
-    )
-    b = (
-        _doc_minhash_buckets(spark, sf_dir)
-        .unionByName(
-            minhash_buckets(
-                boiler, "text", "doc_id", k=3, num_hashes=32, bands=16
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    _MINHASH_BUCKETS_MEMO[key] = (spark, b)
-    return b
+
+    def build(pin):
+        _, boiler, _ = _skew_fixture(spark, sf_dir)
+        b = minhash_buckets(boiler, "text", "doc_id", k=3, num_hashes=32, bands=16)
+        return pin(_doc_minhash_buckets(spark, sf_dir).unionByName(b), lineage=False)
+
+    return shared_build(spark, ("minhash#skew", sf_dir), build)
 
 
 def _skew_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash bucket table for the skewed fixture = the memoized
+    """SimHash bucket table for the skewed fixture = the shared
     documents table ∪ a boilerplate-only build (signatures are per-doc
     independent, so the union is exact) — the _skew_minhash_buckets twin;
     shared by dedup_simhash_capped and dedup_simhash_hot."""
     from qdrant_datafusion_spark.operators.dedup import simhash_buckets
 
-    key = sf_dir + "#skew"
-    hit = _SIMHASH_BUCKETS_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    _, n_docs, boiler_n = _skew_fixture(spark, sf_dir)
-    boiler = spark.range(1, boiler_n + 1).select(
-        (F.lit(_BOILER_BASE) + F.col("id")).alias("doc_id"),
-        F.lit(_BOILER_TEXT).alias("text"),
-    )
-    b = (
-        _doc_simhash_buckets(spark, sf_dir)
-        .unionByName(
-            simhash_buckets(boiler, "text", "doc_id", max_hamming=4, blocks=5)
-        )
-        .localCheckpoint(eager=True)
-    )
-    _SIMHASH_BUCKETS_MEMO[key] = (spark, b)
-    return b
+    def build(pin):
+        _, boiler, _ = _skew_fixture(spark, sf_dir)
+        b = simhash_buckets(boiler, "text", "doc_id", max_hamming=4, blocks=5)
+        return pin(_doc_simhash_buckets(spark, sf_dir).unionByName(b), lineage=False)
+
+    return shared_build(spark, ("simhash#skew", sf_dir), build)
 
 
 def dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4250,7 +4180,7 @@ def dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands) is dropped entirely, so the output is exactly the organic
     exact-Jaccard pair set — the oracle asserts both the drop and the
     undisturbed recall below the cap."""
-    skewed, cap, _ = _skew_fixture(spark, sf_dir)
+    skewed, _, cap = _skew_fixture(spark, sf_dir)
     pairs = minhash_lsh_dups(
         skewed, "text", "doc_id",
         k=3, num_hashes=32, bands=16, threshold=0.2,
@@ -4266,7 +4196,7 @@ def dedup_minhash_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash bucket.  Boilerplate md5 band buckets admit no organic
     collisions, so the geometry is exact: 16 buckets × 2·n_docs members
     (the oracle recomputes 2·n_docs from count(documents))."""
-    skewed, cap, _ = _skew_fixture(spark, sf_dir)
+    skewed, _, cap = _skew_fixture(spark, sf_dir)
     hot = minhash_hot_buckets(
         skewed, "text", "doc_id",
         k=3, num_hashes=32, bands=16, max_bucket_size=cap,
@@ -4291,7 +4221,7 @@ def dedup_simhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     12-bit blocks): all 5 boilerplate block buckets are hot and dropped;
     organic pairs keep pigeonhole completeness below the cap (largest
     organic block bucket measures ~11% of n_docs vs cap = n_docs)."""
-    skewed, cap, _ = _skew_fixture(spark, sf_dir)
+    skewed, _, cap = _skew_fixture(spark, sf_dir)
     pairs = simhash_dups(
         skewed, "text", "doc_id",
         max_hamming=4, blocks=5, max_bucket_size=cap,
@@ -4306,7 +4236,7 @@ def dedup_simhash_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drop audit for the SimHash cap.  A 12-bit block value CAN collide
     with organic signatures (4096 values/block), so the member count is
     asserted as ≥ 2·n_docs rather than an exact literal."""
-    skewed, cap, boiler_n = _skew_fixture(spark, sf_dir)
+    skewed, _, cap = _skew_fixture(spark, sf_dir)
     hot = simhash_hot_buckets(
         skewed, "text", "doc_id",
         max_hamming=4, blocks=5, max_bucket_size=cap,
@@ -4314,7 +4244,7 @@ def dedup_simhash_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return hot.agg(
         F.count("*").alias("n_hot_buckets"),
-        (F.min("n_members") >= boiler_n).alias("boiler_sized"),
+        (F.min("n_members") >= 2 * cap).alias("boiler_sized"),
     )
 
 
@@ -4878,28 +4808,21 @@ QUERIES["q_events_funnel"] = q_events_funnel
 ORACLES["q_events_funnel"] = Q_EVENTS_FUNNEL_SQL
 
 
-_KNN_EDGES_MEMO: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _knn_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine kNN table (id, nbr_id, score, rank) over
     embeddings — the identical construction ann_knn_graph emits and
     graph_pagerank / graph_trustrank / graph_hits start from.  Built
-    once per (session, sf_dir) and pinned with an eager localCheckpoint
-    (the _skew_fixture memo pattern), so the blocked-GEMM scoring pass
-    runs once per sweep instead of once per gate (round 12: widened
-    from the 2-col edge projection so the ann gate rides it too)."""
-    hit = _KNN_EDGES_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    once per (session, sf_dir) and pinned with an eager localCheckpoint,
+    so the blocked-GEMM scoring pass runs once per sweep instead of once
+    per gate (round 12: widened from the 2-col edge projection so the
+    ann gate rides it too)."""
     from qdrant_datafusion_spark.operators.ann import self_knn_join
 
-    emb = _t(spark, sf_dir, "embeddings")
-    table = self_knn_join(
-        emb, "embedding", "vec_id", k=5
-    ).localCheckpoint(eager=True)
-    _KNN_EDGES_MEMO[sf_dir] = (spark, table)
-    return table
+    def build(pin):
+        emb = _t(spark, sf_dir, "embeddings")
+        return pin(self_knn_join(emb, "embedding", "vec_id", k=5), lineage=False)
+
+    return shared_build(spark, ("knn", sf_dir), build)
 
 
 def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6174,26 +6097,22 @@ ORACLES["multimodal_cross_dups"] = MULTIMODAL_CROSS_SQL
 
 BPE_N_MERGES = 12
 
-_BPE_MERGES_MEMO: dict[str, tuple[SparkSession, list]] = {}
-
 
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
     """The trained BPE merge table (bounded driver state: BPE_N_MERGES
     rows) shared by text_bpe_vocab / text_bpe_encode / pipeline_pack_bpe
     — all three train the IDENTICAL model (same corpus, same params), so
     it is trained once per (session, sf_dir) and reused: the
-    train-once/apply-many production pattern, same memo discipline as
-    ``_KNN_EDGES_MEMO`` / ``_MINHASH_BUCKETS_MEMO`` (a fresh session
-    always retrains from the parquet inputs)."""
-    hit = _BPE_MERGES_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    train-once/apply-many production pattern (a fresh session always
+    retrains from the parquet inputs)."""
     from qdrant_datafusion_spark.operators.tokenizer import train_bpe
 
     docs = _t(spark, sf_dir, "documents")
-    merges = train_bpe(docs, "text", n_merges=BPE_N_MERGES)
-    _BPE_MERGES_MEMO[sf_dir] = (spark, merges)
-    return merges
+    return shared_build(
+        spark,
+        ("bpe_merges", sf_dir),
+        lambda pin: train_bpe(docs, "text", n_merges=BPE_N_MERGES),
+    )
 
 
 def text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6301,8 +6220,6 @@ UNIGRAM_KEEP_MULTI = 40
 UNIGRAM_ITERS = 3
 UNIGRAM_TOP_K = 40
 
-_UNIGRAM_VOCAB_MEMO: dict[str, tuple[SparkSession, list]] = {}
-
 
 def _unigram_full_vocab(spark: SparkSession, sf_dir: str) -> list:
     """The FULL trained unigram vocabulary (top_k=10_000 — every piece
@@ -6313,11 +6230,14 @@ def _unigram_full_vocab(spark: SparkSession, sf_dir: str) -> list:
     ``UNIGRAM_TOP_K`` view is exactly ``full[:UNIGRAM_TOP_K]`` (ranks
     are the 1-based list positions on both paths).  Trained once per
     (session, sf_dir) — bounded driver state, the same
-    train-once/apply-many memo discipline as ``_BPE_MERGES_MEMO``.  The
+    train-once/apply-many discipline as :func:`_bpe_merges`.  The
     shared ``maxlen`` oracle-precondition assert runs with the build."""
-    hit = _UNIGRAM_VOCAB_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    return shared_build(
+        spark, ("unigram_vocab", sf_dir), lambda pin: _train_unigram(spark, sf_dir)
+    )
+
+
+def _train_unigram(spark: SparkSession, sf_dir: str) -> list:
     from qdrant_datafusion_spark.operators.tokenizer import (
         _words,
         train_unigram,
@@ -6339,7 +6259,7 @@ def _unigram_full_vocab(spark: SparkSession, sf_dir: str) -> list:
             f"(cap {UNIGRAM_MAX_WORD}) — regenerate the oracle with a "
             "larger position cap"
         )
-    vocab = train_unigram(
+    return train_unigram(
         docs,
         "text",
         max_piece_len=UNIGRAM_PIECE_LEN,
@@ -6348,8 +6268,6 @@ def _unigram_full_vocab(spark: SparkSession, sf_dir: str) -> list:
         n_iters=UNIGRAM_ITERS,
         top_k=10_000,  # full final vocabulary — encode needs the chars
     )
-    _UNIGRAM_VOCAB_MEMO[sf_dir] = (spark, vocab)
-    return vocab
 
 
 def text_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9969,39 +9887,33 @@ QUERIES["pipeline_source_cap"] = pipeline_source_cap
 ORACLES["pipeline_source_cap"] = PIPELINE_SOURCE_CAP_SQL
 
 
-#: (sf_dir -> (session, base, ranked)).  The two prefix-filter gates
-#: (dedup_jaccard_prefix, dedup_containment) ran the IDENTICAL first half
-#: twice: 3-shingle walk → xxhash64 token sets → global token counts →
-#: rarest-first per-doc rank (the rank order is threshold-independent).
-#: One build per (session, sf_dir), eagerly pinned — the established
-#: _MINHASH_BUCKETS_MEMO pattern (guide §2.4); the library seam is
-#: fuzzy.hashed_token_sets / fuzzy.ranked_token_index + the base=/ranked=
-#: parameters.  fan_out first: the shingle walk otherwise runs inside the
-#: one-task single-row-group scan stage (session.fan_out).
-_PREFIX_TOKEN_MEMO: dict[str, tuple[SparkSession, DataFrame, DataFrame]] = {}
-
-
 def _doc_prefix_token_tables(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The shared (hashed token sets, rarest-first rank) tables over
-    documents' 3-shingles, built once per (session, sf_dir)."""
+    documents' 3-shingles, built once per (session, sf_dir) and eagerly
+    pinned.  The two prefix-filter gates (dedup_jaccard_prefix,
+    dedup_containment) share this first half: 3-shingle walk → xxhash64
+    token sets → global token counts → rarest-first per-doc rank (the
+    rank order is threshold-independent); the library seam is
+    fuzzy.hashed_token_sets / fuzzy.ranked_token_index + the
+    base=/ranked= parameters.  fan_out first: the shingle walk otherwise
+    runs inside the one-task single-row-group scan stage
+    (session.fan_out)."""
     from qdrant_datafusion_spark.operators.fuzzy import (
         hashed_token_sets,
         ranked_token_index,
     )
 
-    hit = _PREFIX_TOKEN_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    docs = fan_out(
-        _t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
-    )
-    sh3 = docs.select("doc_id", word_shingles("text", 3).alias("sh3"))
-    base = hashed_token_sets(sh3, "sh3", "doc_id").localCheckpoint(eager=True)
-    ranked = ranked_token_index(base).localCheckpoint(eager=True)
-    _PREFIX_TOKEN_MEMO[sf_dir] = (spark, base, ranked)
-    return base, ranked
+    def build(pin):
+        docs = fan_out(
+            _t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
+        )
+        sh3 = docs.select("doc_id", word_shingles("text", 3).alias("sh3"))
+        base = pin(hashed_token_sets(sh3, "sh3", "doc_id"), lineage=False)
+        return base, pin(ranked_token_index(base), lineage=False)
+
+    return shared_build(spark, ("prefix_tokens", sf_dir), build)
 
 
 def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10289,15 +10201,6 @@ ORACLES["dedup_paragraphs_incremental"] = DEDUP_PARAGRAPHS_INCR_SQL
 
 BOW_DIM = 64
 
-#: shared NB-BoW build (sf_dir -> (session, pinned feats, labels, model)):
-#: text_quality_classifier and text_classifier_pr run the IDENTICAL
-#: feature walk (hashed_bow_counts at dim 64) and the IDENTICAL training
-#: collect (80% split, same labels) — one build per (session, sf_dir),
-#: the _MINHASH_BUCKETS_MEMO pattern (guide §2.4).  The model is plain
-#: driver-side integers (no executor state); feats is eagerly pinned
-#: because both gates read it twice (train split + held-out split).
-_NB_BOW_MEMO: dict[str, tuple] = {}
-
 
 def _nb_bow_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -10319,26 +10222,29 @@ def _nb_bow_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _nb_bow_trained(spark: SparkSession, sf_dir: str):
     """(pinned feats, labels, trained model) at the shared gate
-    parameters — built once per (session, sf_dir)."""
+    parameters — built once per (session, sf_dir).
+    text_quality_classifier and text_classifier_pr run the IDENTICAL
+    feature walk (hashed_bow_counts at dim 64) and the IDENTICAL
+    training collect (80% split, same labels).  The model is plain
+    driver-side integers (no executor state); feats is eagerly pinned
+    because both gates read it twice (train split + held-out split)."""
     from qdrant_datafusion_spark.operators.classify import (
         hashed_bow_counts,
         train_nb_bow,
     )
 
-    hit = _NB_BOW_MEMO.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2], hit[3]
-    docs = _t(spark, sf_dir, "documents")
-    labels = _nb_bow_labels(spark, sf_dir)
-    feats = hashed_bow_counts(
-        docs, "text", "doc_id", dim=BOW_DIM
-    ).localCheckpoint(eager=True)
-    part = F.pmod(F.col("doc_id"), F.lit(10))
-    model = train_nb_bow(
-        feats.filter(part < 8), labels.filter(part < 8), dim=BOW_DIM
-    )
-    _NB_BOW_MEMO[sf_dir] = (spark, feats, labels, model)
-    return feats, labels, model
+    def build(pin):
+        docs = _t(spark, sf_dir, "documents")
+        labels = _nb_bow_labels(spark, sf_dir)
+        feats = hashed_bow_counts(docs, "text", "doc_id", dim=BOW_DIM)
+        feats = pin(feats, lineage=False)
+        part = F.pmod(F.col("doc_id"), F.lit(10))
+        model = train_nb_bow(
+            feats.filter(part < 8), labels.filter(part < 8), dim=BOW_DIM
+        )
+        return feats, labels, model
+
+    return shared_build(spark, ("nb_bow", sf_dir), build)
 
 
 def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
+from qdrant_datafusion_spark.session import shared_build
+
 
 def _dense_batch(v: pd.Series, q: pd.Series, kernel) -> pd.Series:
     """Run a dense pairwise kernel over an Arrow batch WITHOUT a per-row
@@ -189,27 +191,16 @@ def _maxsim_batch(mv: pd.Series, q: pd.Series) -> pd.Series:
     return res
 
 
-#: sessions already registered (identity-checked): registration is
-#: idempotent (CREATE OR REPLACE + udf.register), but each call parses
-#: ~20 DDL statements and re-wraps 7 Python UDFs — ~0.3s of driver-side
-#: work per call (guide §7.3).  Holding the session object keeps its
-#: id() from being reused by a successor session; stopped sessions are
-#: dropped on every lookup, so a process that recreates sessions does
-#: not keep the dead ones alive.
-_REGISTERED_SESSIONS: list[SparkSession] = []
-
-
 def register_all(spark: SparkSession) -> None:
     """Install SQL-callable versions of the V_* surface on this session.
 
-    Idempotent and memoized per live session — repeat calls on a session
-    that already has the surface installed are a no-op."""
-    _REGISTERED_SESSIONS[:] = [
-        s for s in _REGISTERED_SESSIONS if s.sparkContext._jsc is not None
-    ]  # a stopped session's context has no JVM handle
-    if any(s is spark for s in _REGISTERED_SESSIONS):
-        return
+    Idempotent, and run once per session (:func:`shared_build`): each
+    install parses ~20 DDL statements and re-wraps 7 Python UDFs, ~0.3s
+    of driver-side work that a repeat call skips."""
+    shared_build(spark, "register_all", lambda pin: _install(spark))
 
+
+def _install(spark: SparkSession) -> None:
     @pandas_udf("double")
     def v_cosine(v: pd.Series, q: pd.Series) -> pd.Series:
         return _dense_batch(v, q, _cosine_kernel)
@@ -287,7 +278,6 @@ def register_all(spark: SparkSession) -> None:
     # is pure built-in expression, so all of these inline into the plan
     for ddl in _SQL_FUNCTION_DDL:
         spark.sql(ddl)
-    _REGISTERED_SESSIONS.append(spark)
 
 
 #: SQL-defined functions completing the corpus's SQL-callable surface

@@ -334,26 +334,6 @@ def _hot_bucket_stats(
     )
 
 
-def minhash_buckets(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-) -> DataFrame:
-    """The banded MinHash signature/bucket table ``(_id, _fp, bucket)``
-    — one row per (doc, band) — that every ``minhash_*`` entry point
-    builds internally.  Exposed so the EXPENSIVE stage (shingle → md5 →
-    signature) can run ONCE and be reused: persist it (production:
-    ``write.bucketBy("bucket")`` so downstream joins never re-shuffle)
-    or pin it in-session, then pass it back via the ``buckets=`` /
-    ``corpus_buckets=`` parameters.  Per-doc independent, so a row
-    filter on ``_id`` equals building the table on the filtered input —
-    one corpus-wide table serves any corpus/batch split."""
-    return _minhash_buckets(df, content_col, id_col, k, num_hashes, bands)
-
-
 def minhash_lsh_dups(
     df: DataFrame,
     content_col: str,
@@ -388,19 +368,9 @@ def minhash_lsh_dups(
     table's build).  The cap still applies here.
     """
     if buckets is None:
-        buckets = _minhash_buckets(df, content_col, id_col, k, num_hashes, bands)
+        buckets = minhash_buckets(df, content_col, id_col, k, num_hashes, bands)
     buckets = _cap_hot_buckets(buckets, ["bucket"], max_bucket_size)
 
-    # decide with small rows, attach the payload once (guide §8): the
-    # bucket self-join carries ONLY (_id, bucket) — shipping the full
-    # fingerprint array through every band row multiplied the shuffle by
-    # the band count, and verifying INSIDE the join re-ran the
-    # array_intersect once per SHARED bucket (a true near-dup pair shares
-    # most of its bands, so the old inline verify paid up to ``bands``×
-    # the intersection work; measured 37s → 9s on the 10× fixture's
-    # 250k-pair structure).  The distinct shuffles 16-byte id pairs, then
-    # each surviving pair attaches fingerprints once and verifies once —
-    # same arrays, same expression, bit-identical emitted values.
     slim = buckets.select("_id", "bucket")
     cand = (
         slim.select(F.col("_id").alias("id_a"), "bucket")
@@ -410,6 +380,25 @@ def minhash_lsh_dups(
         .distinct()
     )
     fps = buckets.select("_id", "_fp").dropDuplicates(["_id"])
+    return _verify_fingerprints(cand, fps, threshold)
+
+
+def _verify_fingerprints(
+    cand: DataFrame, fps: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, inter, n_union, jaccard) for each candidate pair of
+    ``cand`` (id_a, id_b) whose fingerprint sets have exact Jaccard ≥
+    ``threshold``; ``fps`` holds one ``(_id, _fp)`` row per id.
+
+    Decide with small rows, attach the payload once (guide §8): the
+    candidate join carries ONLY ids — shipping the full fingerprint
+    array through every band row multiplied the shuffle by the band
+    count, and verifying INSIDE the bucket join re-ran the
+    array_intersect once per SHARED bucket (a true near-dup pair shares
+    most of its bands, so the inline verify paid up to ``bands``× the
+    intersection work; measured 37s → 9s on the 10× fixture's 250k-pair
+    structure).  Each distinct candidate pair attaches its two
+    fingerprint sets once and verifies once."""
     fpa = fps.select(F.col("_id").alias("id_a"), F.col("_fp").alias("fp_a"))
     fpb = fps.select(F.col("_id").alias("id_b"), F.col("_fp").alias("fp_b"))
     inter = F.size(F.array_intersect(F.col("fp_a"), F.col("fp_b")))
@@ -534,23 +523,8 @@ def minhash_lsh_dups_mllib(
     )
     # exact verify on the pinned fingerprint table: the candidate pair
     # set post-MLlib-filter is small, so these are broadcast-sized joins
-    fpa = fps.select(F.col("_id").alias("id_a"), F.col("_fp").alias("fp_a"))
-    fpb = fps.select(F.col("_id").alias("id_b"), F.col("_fp").alias("fp_b"))
-    inter = F.size(F.array_intersect(F.col("fp_a"), F.col("fp_b")))
-    union = F.size(F.col("fp_a")) + F.size(F.col("fp_b")) - inter
-    jac = inter.cast("double") / union
-    return (
-        pair_ids.join(fpa, "id_a")
-        .join(fpb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            inter.cast("long").alias("inter"),
-            union.cast("long").alias("n_union"),
-            jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
+    return _verify_fingerprints(pair_ids, fps, threshold).dropDuplicates(
+        ["id_a", "id_b"]
     )
 
 
@@ -568,21 +542,27 @@ def minhash_hot_buckets(
     the audit companion to :func:`minhash_lsh_dups`'s skew guard.
     ``buckets``: precomputed :func:`minhash_buckets` table (see there)."""
     if buckets is None:
-        buckets = _minhash_buckets(df, content_col, id_col, k, num_hashes, bands)
+        buckets = minhash_buckets(df, content_col, id_col, k, num_hashes, bands)
     return _hot_bucket_stats(buckets, ["bucket"], max_bucket_size)
 
 
-def _minhash_buckets(
+def minhash_buckets(
     df: DataFrame,
     content_col: str,
     id_col: str,
-    k: int,
-    num_hashes: int,
-    bands: int,
+    k: int = 3,
+    num_hashes: int = 32,
+    bands: int = 16,
 ) -> DataFrame:
-    """(_id, _fp, bucket) — one row per (doc, band): the exploded banded
-    MinHash bucket assignment shared by the dedup join and the hot-bucket
-    audit."""
+    """The banded MinHash signature/bucket table ``(_id, _fp, bucket)``
+    — one row per (doc, band) — that every ``minhash_*`` entry point
+    builds internally.  Exposed so the EXPENSIVE stage (shingle → md5 →
+    signature) can run ONCE and be reused: persist it (production:
+    ``write.bucketBy("bucket")`` so downstream joins never re-shuffle)
+    or pin it in-session, then pass it back via the ``buckets=`` /
+    ``corpus_buckets=`` parameters.  Per-doc independent, so a row
+    filter on ``_id`` equals building the table on the filtered input —
+    one corpus-wide table serves any corpus/batch split."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     rows_per_band = num_hashes // bands
@@ -767,16 +747,21 @@ def simhash_signatures(
     return summed.select("_id", sig.alias("sig"))
 
 
-def _simhash_buckets(
+def simhash_buckets(
     df: DataFrame,
     content_col: str,
     id_col: str,
-    max_hamming: int,
-    blocks: int | None,
+    max_hamming: int = 3,
+    blocks: int | None = None,
 ) -> DataFrame:
-    """(_id, sig, bid, bval) — one row per (doc, signature block): the
-    exploded block-permutation bucket assignment shared by the dedup join
-    and the hot-bucket audit."""
+    """The exploded SimHash block-bucket table (_id, sig, bid, bval) —
+    one row per (doc, signature block), the :func:`minhash_buckets`
+    twin.  Build it once (persist it, or pin it in-session) and pass it
+    back through the ``buckets=`` parameter of :func:`simhash_dups` /
+    :func:`simhash_hot_buckets` so the signature pass (the dominant cost:
+    token explode + 20 packed vote aggregations) runs once per corpus,
+    not once per consumer.  Per-doc independent, so unioning
+    independently built tables equals building over the unioned input."""
     nblocks = blocks or (max_hamming + 1)
     sig = simhash_signatures(df, content_col, id_col)
 
@@ -802,24 +787,6 @@ def _simhash_buckets(
     ).select("_id", "sig", F.col("b.bid").alias("bid"), F.col("b.bval").alias("bval"))
 
 
-def simhash_buckets(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    blocks: int | None = None,
-) -> DataFrame:
-    """Public builder for the exploded SimHash block-bucket table
-    (_id, sig, bid, bval) — the :func:`minhash_buckets` twin.  Build it
-    once (persist it, or pin it in-session) and pass it back through the
-    ``buckets=`` parameter of :func:`simhash_dups` /
-    :func:`simhash_hot_buckets` so the signature pass (the dominant cost:
-    token explode + 20 packed vote aggregations) runs once per corpus,
-    not once per consumer.  Per-doc independent, so unioning
-    independently built tables equals building over the unioned input."""
-    return _simhash_buckets(df, content_col, id_col, max_hamming, blocks)
-
-
 def simhash_hot_buckets(
     df: DataFrame,
     content_col: str,
@@ -833,7 +800,7 @@ def simhash_hot_buckets(
     the audit companion to :func:`simhash_dups`'s skew guard.
     ``buckets``: precomputed :func:`simhash_buckets` table (see there)."""
     if buckets is None:
-        buckets = _simhash_buckets(df, content_col, id_col, max_hamming, blocks)
+        buckets = simhash_buckets(df, content_col, id_col, max_hamming, blocks)
     return _hot_bucket_stats(
         buckets,
         ["bid", "bval"],
@@ -870,7 +837,7 @@ def simhash_dups(
     table's build).  The cap still applies here.
     """
     if buckets is None:
-        buckets = _simhash_buckets(df, content_col, id_col, max_hamming, blocks)
+        buckets = simhash_buckets(df, content_col, id_col, max_hamming, blocks)
     exploded = _cap_hot_buckets(
         buckets,
         ["bid", "bval"],
@@ -1630,11 +1597,11 @@ def minhash_incremental_dups(
     means both can be ``_id`` filters of one corpus-wide table.
     """
     if corpus_buckets is None:
-        corpus_buckets = _minhash_buckets(
+        corpus_buckets = minhash_buckets(
             corpus, content_col, id_col, k, num_hashes, bands
         )
     if batch_buckets is None:
-        batch_buckets = _minhash_buckets(
+        batch_buckets = minhash_buckets(
             batch, content_col, id_col, k, num_hashes, bands
         )
     corpus_b = corpus_buckets.withColumn("_new", F.lit(False))
@@ -1644,33 +1611,23 @@ def minhash_incremental_dups(
     )
 
     a = buckets.select(
-        F.col("_id").alias("id_a"), F.col("_fp").alias("fp_a"),
-        F.col("_new").alias("new_a"), "bucket",
+        F.col("_id").alias("id_a"), F.col("_new").alias("new_a"), "bucket"
     )
     b_ = buckets.select(
-        F.col("_id").alias("id_b"), F.col("_fp").alias("fp_b"),
-        F.col("_new").alias("new_b"), "bucket",
+        F.col("_id").alias("id_b"), F.col("_new").alias("new_b"), "bucket"
     )
-    inter = F.size(F.array_intersect(F.col("fp_a"), F.col("fp_b")))
-    union = F.size(F.col("fp_a")) + F.size(F.col("fp_b")) - inter
-    jac = inter.cast("double") / union
-    return (
+    cand = (
         # same SMJ pin as fuzzy.set_similarity_pairs: both exploded sides
         # are data-sized but Catalyst estimates them from pre-explode
         # stats and can pick a driver-fatal broadcast at scale
         a.hint("merge").join(b_, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(F.col("new_a") | F.col("new_b"))
-        .select(
-            "id_a",
-            "id_b",
-            inter.cast("long").alias("inter"),
-            union.cast("long").alias("n_union"),
-            jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
+        .select("id_a", "id_b")
+        .distinct()
     )
+    fps = buckets.select("_id", "_fp").dropDuplicates(["_id"])
+    return _verify_fingerprints(cand, fps, threshold)
 
 
 def sorted_neighborhood_pairs(

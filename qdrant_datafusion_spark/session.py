@@ -15,13 +15,19 @@ written so the same code runs unchanged on a real cluster:
   ``extra_conf``.
 - Arrow enabled for every Python<->JVM boundary (pandas UDFs, toPandas).
 - UTC session timezone so results hash-match a DuckDB oracle.
+
+It also owns the package's one pin-and-release implementation,
+:class:`Pins`, in two scopes: a streaming micro-batch
+(``streaming.ingest._run_batches``) and a session (:func:`shared_build`).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -169,3 +175,62 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
             spark.read.parquet(path).createOrReplaceTempView(name)
+
+
+class Pins:
+    """Frames pinned in one scope and released together.
+
+    ``pin(df)`` persists ``df``: the pin keeps its lineage, so a lost
+    executor recomputes a block instead of failing the reader.
+    ``pin(df, lineage=False)`` takes an eager ``localCheckpoint``
+    instead, for a frame whose sources are then overwritten or which is
+    read by many later plans; its blocks are not replicated, so on a
+    cluster an executor loss fails its readers.  :meth:`release` frees
+    every pin, newest first.
+    """
+
+    def __init__(self) -> None:
+        self._releases: list[Callable[[], object]] = []
+
+    def __call__(self, df: DataFrame, lineage: bool = True) -> DataFrame:
+        if lineage:
+            df = df.persist()
+            self._releases.append(df.unpersist)
+        else:
+            df = df.localCheckpoint(eager=True)
+            rdd = df._jdf.logicalPlan().rdd()  # the checkpointed blocks
+            self._releases.append(lambda: rdd.unpersist(False))
+        return df
+
+    def release(self) -> None:
+        # newest first: releasing a pin that a later pin's plan reads
+        # would make Spark re-plan that later pin
+        while self._releases:
+            self._releases.pop()()
+
+
+#: (owner session, its shared builds by key, the pins they took)
+_shared: tuple[SparkSession | None, dict[Any, Any], Pins] = (None, {}, Pins())
+
+
+def shared_build(spark: SparkSession, key: Any, build: Callable[[Pins], Any]) -> Any:
+    """``build(pin)``, run once per session and ``key`` and then reused.
+
+    Lifetime: entries live for their owner session, and only one session
+    owns entries at a time.  The first call from another session
+    releases every pin the old entries took (skipped when the old
+    session's context is already stopped: it has no JVM left to release
+    into), drops them, and makes the caller the owner.  A frame built
+    from an evicted entry must therefore not be read after a session
+    switch: the blocks it reads are gone.  Builds may nest; ``pin`` is
+    the session scope's :class:`Pins`.
+    """
+    global _shared
+    owner, values, pins = _shared
+    if owner is not spark:
+        if owner is not None and owner.sparkContext._jsc is not None:
+            pins.release()
+        owner, values, pins = _shared = (spark, {}, Pins())
+    if key not in values:
+        values[key] = build(pins)
+    return values[key]

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from qdrant_datafusion_spark.session import Pins
+
 
 def _hadoop_path(spark, path: str):
     """``(FileSystem, Path)`` for ``path`` through Hadoop's FileSystem
@@ -100,43 +102,27 @@ def _overwrite_partitions(df: DataFrame, path: str, part_col: str) -> None:
 def _run_batches(
     stream: DataFrame,
     checkpoint_dir: str,
-    body: Callable[[DataFrame, int, Callable[..., DataFrame]], None],
+    body: Callable[[DataFrame, int, Pins], None],
 ) -> StreamingQuery:
     """Drain ``stream`` with an ``availableNow`` ``foreachBatch`` query
     that calls ``body(batch, batch_id, pin)`` on every non-empty
     micro-batch.
 
     The micro-batch arrives pinned and the empty check reads the pin, so
-    each batch scans its source once.  ``pin(df)`` pins a frame the body
-    reads more than once; every pin is released, newest first, before
-    the batch returns.  Pins are ``persist``: they keep their lineage, so
-    a lost executor recomputes a block instead of failing the batch.
-    ``pin(df, lineage=False)`` takes an eager ``localCheckpoint``
-    instead, for a frame whose sources the body then overwrites.
+    each batch scans its source once.  ``pin`` is a :class:`Pins` scoped
+    to the batch: ``pin(df)`` pins a frame the body reads more than
+    once, ``pin(df, lineage=False)`` one whose sources the body then
+    overwrites, and every pin is released before the batch returns.
     """
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        releases: list[Callable[[], object]] = []
-
-        def pin(df: DataFrame, lineage: bool = True) -> DataFrame:
-            if lineage:
-                df = df.persist()
-                releases.append(df.unpersist)
-            else:
-                df = df.localCheckpoint(eager=True)
-                rdd = df._jdf.logicalPlan().rdd()  # the checkpointed blocks
-                releases.append(lambda: rdd.unpersist(False))
-            return df
-
+        pin = Pins()
         try:
             batch = pin(batch)
             if not batch.isEmpty():
                 body(batch, int(batch_id), pin)
         finally:
-            # newest first: releasing a pin that a later pin's plan reads
-            # would make Spark re-plan that later pin
-            for release in reversed(releases):
-                release()
+            pin.release()
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -425,7 +411,7 @@ def stream_near_dup_ingest(
     are :func:`_store_join_ingest`'s.  Each batch is signed once and
     decided once:
 
-    1. one `_minhash_buckets` pass over the pinned batch gives the pinned
+    1. one `minhash_buckets` pass over the pinned batch gives the pinned
        signature table ``(_id, _fp, bucket)`` — signatures are the
        expensive stage, everything downstream is bucket-keyed joins;
     2. from that one table: the in-batch near-dups (the capped bucket
@@ -463,11 +449,11 @@ def stream_near_dup_ingest(
     """
     from qdrant_datafusion_spark.operators.dedup import (
         _cap_hot_buckets,
-        _minhash_buckets,
+        minhash_buckets,
     )
 
     def decide(batch: DataFrame, store: DataFrame, pin):
-        sigs = pin(_minhash_buckets(batch, content_col, id_col, k, num_hashes, bands))
+        sigs = pin(minhash_buckets(batch, content_col, id_col, k, num_hashes, bands))
         # in-batch near-dups: the capped bucket self-join, keep the
         # smallest id (same kernel as minhash_lsh_dups)
         paired = _cap_hot_buckets(sigs, ["bucket"], max_bucket_size)
@@ -494,7 +480,7 @@ def stream_near_dup_ingest(
         store_dir,
         out_dir,
         checkpoint_dir,
-        # the (_id, _fp, bucket) rows of _minhash_buckets
+        # the (_id, _fp, bucket) rows of minhash_buckets
         lambda b: f"_id {b.schema[id_col].dataType.simpleString()}, "
         "_fp array<bigint>, bucket string",
         decide,

@@ -77,12 +77,10 @@ class TestSessionScaleConfigs:
             with open(path, encoding="utf-8") as f:
                 walk(ast.parse(f.read()), os.path.relpath(path, pkg), "<module>")
         allowed = {
-            # boilerplate-skew fixtures: 2x n_docs rows of one constant
+            # boilerplate-skew fixture: 2x n_docs rows of one constant
             # string, consumed ONLY by signature builders that fan_out
             # before the shingle walk (verified round 13)
             ("entry_queries.py", "_skew_fixture"),
-            ("entry_queries.py", "_skew_minhash_buckets"),
-            ("entry_queries.py", "_skew_simhash_buckets"),
             # 63-row literal bucket table feeding a broadcast join
             ("entry_queries.py", "q_range_bucket_join"),
         }
@@ -129,28 +127,77 @@ class TestSessionScaleConfigs:
         assert occupied >= 2, f"byte-heavy shuffle collapsed to {occupied}"
 
 
-class TestSessionScopedMemos:
-    """Per-session memos must not serve, or keep alive, another session.
-    Stub sessions stand in for stopped or foreign ones, so the shared
-    test session is never stopped."""
+class TestSharedBuild:
+    """``session.shared_build``: one owner session's builds, released
+    when another session takes over.  New sessions stand in for the
+    other sessions (a stub for a stopped one), so the shared test
+    session is never stopped."""
 
-    def test_register_all_drops_stopped_sessions(self, spark):
+    def test_stopped_owner_is_dropped_without_touching_its_jvm(self, spark):
         from types import SimpleNamespace
 
-        from qdrant_datafusion_spark.functions import registry
+        from qdrant_datafusion_spark.session import shared_build
+
+        released = []
+
+        class Frame:  # a pin whose release would need the stopped JVM
+            def persist(self):
+                return self
+
+            def unpersist(self):
+                released.append(self)
 
         stopped = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
-        registry._REGISTERED_SESSIONS.append(stopped)
-        registry.register_all(spark)
-        assert all(s is not stopped for s in registry._REGISTERED_SESSIONS)
-        assert any(s is spark for s in registry._REGISTERED_SESSIONS)
+        shared_build(stopped, "k", lambda pin: pin(Frame()))
+        assert shared_build(spark.newSession(), "k", lambda pin: "live") == "live"
+        assert released == []
 
-    def test_n_docs_memo_is_keyed_on_the_session(self, spark, sf_dir):
+    def test_another_sessions_entry_is_never_served(self, spark, sf_dir):
+        from qdrant_datafusion_spark import entry_queries as eq
+        from qdrant_datafusion_spark.session import shared_build
+
+        other, mine = spark.newSession(), spark.newSession()
+        assert shared_build(other, "k", lambda pin: "other") == "other"
+        assert shared_build(mine, "k", lambda pin: "mine") == "mine"
+        # the skew fixture's document count, first counted by another session
+        shared_build(other, ("n_docs", sf_dir), lambda pin: -1)
+        _, boiler, n_docs = eq._skew_fixture(mine, sf_dir)
+        assert n_docs == eq._t(mine, sf_dir, "documents").count() > 0
+        assert boiler.count() == 2 * n_docs
+
+    def test_same_session_builds_once(self, spark):
+        from qdrant_datafusion_spark.session import shared_build
+
+        session, calls = spark.newSession(), []
+
+        def build(pin):
+            calls.append(1)
+            return len(calls)
+
+        assert shared_build(session, "k", build) == 1
+        assert shared_build(session, "k", build) == 1
+        assert calls == [1]
+
+    def test_session_change_releases_the_old_pins(self, spark, sf_dir):
         from qdrant_datafusion_spark import entry_queries as eq
 
-        other = object()  # another session's entry for the same sf_dir
-        eq._N_DOCS_MEMO[sf_dir] = (other, -1)
-        _, n_docs, boiler_n = eq._skew_fixture(spark, sf_dir)
-        assert n_docs == eq._t(spark, sf_dir, "documents").count() > 0
-        assert boiler_n == 2 * n_docs
-        assert eq._N_DOCS_MEMO[sf_dir] == (spark, n_docs)
+        def pinned_rdds(session):
+            tables = (eq._doc_minhash_buckets, eq._knn_table)
+            return {t(session, sf_dir)._jdf.logicalPlan().rdd().id() for t in tables}
+
+        first = pinned_rdds(spark.newSession())
+        second = pinned_rdds(spark.newSession())
+        persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+        assert len(first | second) == 4
+        assert (first | second) & persisted == second
+
+    def test_results_survive_session_switches(self, spark, sf_dir):
+        from qdrant_datafusion_spark import entry_queries as eq
+
+        def rows(session):
+            return sorted(eq.dedup_minhash(session, sf_dir).collect())
+
+        before = rows(spark)
+        assert before
+        assert rows(spark.newSession()) == before
+        assert rows(spark) == before
