@@ -19,15 +19,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from qdrant_datafusion_spark.functions.distance import _as_vec
-
-
-def _dot_lambda(d: Column, q_literal: Sequence[float]) -> Column:
-    """dot(d, q) where q is a Python literal — unrolled, no zip allocation."""
-    qvec = _as_vec(q_literal)
-    # multiply in double — float32 products drift ~1e-8 vs a double oracle
-    prods = F.zip_with(d, qvec, lambda a, b: a.cast("double") * b.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+from qdrant_datafusion_spark.functions.distance import dot_product
 
 
 def v_colbert(
@@ -47,7 +39,7 @@ def v_colbert(
     def max_sim_for(q: Sequence[float]) -> Column:
         # single-arg lambda: a 2-arg lambda would make transform pass the
         # element *index* as the second argument
-        return F.array_max(F.transform(mv, lambda d: _dot_lambda(d, q)))
+        return F.array_max(F.transform(mv, lambda d: dot_product(d, q)))
 
     per_query = [max_sim_for(q) for q in query_multi]
     total = per_query[0]

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
+from qdrant_datafusion_spark.functions.distance import DENSE_METRICS, distance_sql, kernel_sql
 from qdrant_datafusion_spark.session import shared_build
 
 
@@ -222,23 +223,14 @@ def _install(spark: SparkSession) -> None:
         return _maxsim_batch(mv, q)
 
     # V_SEARCH is a Spark 4 SQL-defined function, not a Python UDF: the
-    # body inlines into the plan (sequential fold, bit-identical to the
-    # Column-level kernel in functions.distance), so SQL callers —
-    # including correlated LATERAL subqueries — never cross the Python
-    # boundary.  try_divide: zero vectors yield NULL under ANSI mode.
+    # body is the cosine text of the kernel table in functions.distance,
+    # so it inlines into the plan bit-identical to the Column-level
+    # kernel, and SQL callers — including correlated LATERAL subqueries —
+    # never cross the Python boundary.
     spark.sql(
-        """
-        CREATE OR REPLACE TEMPORARY FUNCTION V_SEARCH(
-            v ARRAY<DOUBLE>, q ARRAY<DOUBLE>)
-        RETURNS DOUBLE
-        RETURN try_divide(
-          aggregate(zip_with(v, q, (x, y) -> x * y),
-                    CAST(0.0 AS DOUBLE), (a, x) -> a + x),
-          sqrt(aggregate(zip_with(v, v, (x, y) -> x * y),
-                         CAST(0.0 AS DOUBLE), (a, x) -> a + x))
-          * sqrt(aggregate(zip_with(q, q, (x, y) -> x * y),
-                           CAST(0.0 AS DOUBLE), (a, x) -> a + x)))
-        """
+        "CREATE OR REPLACE TEMPORARY FUNCTION V_SEARCH("
+        "v ARRAY<DOUBLE>, q ARRAY<DOUBLE>) RETURNS DOUBLE "
+        "RETURN " + kernel_sql("cosine", "v", "q")
     )
     spark.udf.register("V_COSINE", v_cosine)
     spark.udf.register("V_DOT", v_dot)
@@ -300,24 +292,18 @@ _SQL_FUNCTION_DDL = [
     RETURNS INT
     RETURN coalesce(json_array_length(s), size(json_object_keys(s)))
     """,
-    # V_DISTANCE(v, q, metric): lower = closer (cosine -> 1 - similarity)
+    # V_DISTANCE(v, q, metric): lower = closer (cosine -> 1 - similarity),
+    # one CASE arm per kernel of functions.distance.KERNELS
     """
     CREATE OR REPLACE TEMPORARY FUNCTION V_DISTANCE(
         v ARRAY<DOUBLE>, q ARRAY<DOUBLE>, metric STRING)
     RETURNS DOUBLE
     RETURN CASE metric
-      WHEN 'cosine' THEN 1.0 - try_divide(
-        aggregate(zip_with(v, q, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, x) -> a + x),
-        sqrt(aggregate(zip_with(v, v, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, x) -> a + x))
-        * sqrt(aggregate(zip_with(q, q, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, x) -> a + x)))
-      WHEN 'dot' THEN -aggregate(zip_with(v, q, (x, y) -> x * y),
-                                 CAST(0.0 AS DOUBLE), (a, x) -> a + x)
-      WHEN 'euclid' THEN sqrt(aggregate(zip_with(v, q, (x, y) -> (x - y) * (x - y)),
-                                        CAST(0.0 AS DOUBLE), (a, x) -> a + x))
-      WHEN 'manhattan' THEN aggregate(zip_with(v, q, (x, y) -> abs(x - y)),
-                                      CAST(0.0 AS DOUBLE), (a, x) -> a + x)
-      ELSE CAST(NULL AS DOUBLE) END
-    """,
+    """
+    + "".join(
+        f"  WHEN '{m}' THEN {distance_sql(m, 'v', 'q')}\n" for m in DENSE_METRICS
+    )
+    + "  ELSE CAST(NULL AS DOUBLE) END",
     # V_FUSION(scores, method): the corpus's scalar fusion shape
     # (tests/bin/tests.sql:371; semantics match functions.fusion.v_fusion —
     # scalar 'rrf' sums reciprocal *scores*, true rank-RRF is rrf_fuse)
@@ -336,9 +322,9 @@ _SQL_FUNCTION_DDL = [
     CREATE OR REPLACE TEMPORARY FUNCTION V_WITHIN(
         v ARRAY<DOUBLE>, q ARRAY<DOUBLE>, radius DOUBLE)
     RETURNS BOOLEAN
-    RETURN sqrt(aggregate(zip_with(v, q, (x, y) -> (x - y) * (x - y)),
-                          CAST(0.0 AS DOUBLE), (a, x) -> a + x)) < radius
-    """,
+    RETURN """
+    + distance_sql("euclid", "v", "q")
+    + " < radius",
     # HAS_FIELD(payload_json, field)
     """
     CREATE OR REPLACE TEMPORARY FUNCTION HAS_FIELD(payload STRING, field STRING)

@@ -10,7 +10,10 @@ Two execution strategies:
 1. ``v_sparse_search`` — per-row native kernel: the query becomes a literal
    ``map<long,double>``; score = Σ values[i] * query[indices[i]] via
    ``zip_with`` + ``element_at`` + ``aggregate``.  O(nnz) per row, zero
-   shuffle, stays in codegen.  Right when the query is one literal vector.
+   shuffle, no Python boundary; the higher-order functions are
+   ``CodegenFallback``, so the scoring ``Project`` runs interpreted
+   outside WholeStageCodegen.  Right when the query is one literal
+   vector.
 
 2. ``sparse_dot_join`` — the 100 TB path for *many* queries: explode both
    sides to (id, index, value), equi-join on index (queries side is small →
@@ -25,18 +28,22 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from qdrant_datafusion_spark.functions.distance import _as_col, ColumnOrName
+from qdrant_datafusion_spark.functions.distance import (
+    ColumnOrName,
+    _as_col,
+    _fold_col,
+    column_sql,
+    double_sql,
+    kernel_sql,
+)
 
 
-def _query_map(query: Mapping[int, float] | Sequence[tuple[int, float]]) -> Column:
+def _query_map(query: Mapping[int, float] | Sequence[tuple[int, float]]) -> str:
+    """The literal query as one ``map<bigint, double>`` SQL constant."""
     items = list(query.items()) if isinstance(query, Mapping) else list(query)
     if not items:
-        return F.map_from_arrays(F.array().cast("array<bigint>"), F.array().cast("array<double>"))
-    kv: list[Column] = []
-    for idx, val in items:
-        kv.append(F.lit(int(idx)))
-        kv.append(F.lit(float(val)))
-    return F.create_map(*kv)
+        return "CAST(map() AS MAP<BIGINT, DOUBLE>)"
+    return "map(" + ", ".join(f"{int(i)}L, {double_sql(float(v))}" for i, v in items) + ")"
 
 
 def sparse_dot_columns(
@@ -46,15 +53,20 @@ def sparse_dot_columns(
 ) -> Column:
     """Sparse dot product of a row's (indices, values) pair against a literal
     sparse query.  NULL indices/values → NULL score (nullable vector rule,
-    reference src/arrow/schema.rs:98-104)."""
+    reference src/arrow/schema.rs:98-104).  With column names the kernel
+    is one ``F.expr`` over the ``sparse`` text of the kernel table."""
     qmap = _query_map(query)
-    terms = F.zip_with(
+    if isinstance(indices, str) and isinstance(values, str):
+        return F.expr(
+            kernel_sql("sparse", column_sql(indices), column_sql(values), m=qmap)
+        )
+    m = F.expr(qmap)
+    return _fold_col(
         _as_col(indices),
         _as_col(values),
-        lambda i, v: F.coalesce(F.element_at(qmap, i.cast("bigint")), F.lit(0.0))
+        lambda i, v: F.coalesce(F.element_at(m, i.cast("bigint")), F.lit(0.0))
         * v.cast("double"),
     )
-    return F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
 
 
 # SQL-facing alias with the reference's name

@@ -21,8 +21,8 @@ tie boundary.
 
 Numeric contract: the score is computed with the SAME sequential
 left-fold summation order as the scalar kernel
-(``functions/distance.py`` ``_fsum`` = ``F.aggregate(zip_with(v, q, *),
-0.0, acc + x)``) — a plain element-order Python loop, NOT numpy BLAS
+(``functions/distance.py`` ``FOLD`` = ``aggregate(zip_with(v, q, *),
+0.0, a + t)``) — a plain element-order Python loop, NOT numpy BLAS
 dot (pairwise summation reorders the adds and can differ in the last
 ulp) — and rounded with decimal HALF_UP exactly as Spark's
 ``round(double, 6)`` does (``BigDecimal.valueOf(x).setScale(6,

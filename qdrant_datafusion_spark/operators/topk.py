@@ -26,7 +26,12 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from qdrant_datafusion_spark.functions.distance import v_search
+from qdrant_datafusion_spark.functions.distance import (
+    column_sql,
+    norm_sql,
+    score_sql,
+    v_search,
+)
 
 
 def top_k(
@@ -64,15 +69,22 @@ def batch_search(
 
     The query table broadcasts (it is always small relative to the
     collection); scoring is one distributed pass; per-query ranking
-    shuffles only on query_id.  Ties break on id for determinism.
+    shuffles only on query_id.  Ties break on id for determinism.  For
+    cosine, each collection row's norm and each query's norm are
+    computed once before the cross join, not once per (row, query) pair.
     """
-    pairs = collection.filter(F.col(vector_col).isNotNull()).crossJoin(
-        F.broadcast(queries.select(query_id_col, query_vec_col))
-    )
-    scored = pairs.select(
+    coll = collection.filter(F.col(vector_col).isNotNull())
+    queries = queries.select(query_id_col, query_vec_col)
+    v, q = column_sql(vector_col), column_sql(query_vec_col)
+    norms = {}
+    if metric == "cosine":
+        coll = coll.withColumn("_batch_vn", F.expr(norm_sql(v)))
+        queries = queries.withColumn("_batch_qn", F.expr(norm_sql(q)))
+        norms = {"vn": "_batch_vn", "qn": "_batch_qn"}
+    scored = coll.crossJoin(F.broadcast(queries)).select(
         query_id_col,
         id_col,
-        v_search(F.col(vector_col), F.col(query_vec_col), metric).alias(score_col),
+        F.expr(score_sql(metric, v, q, **norms)).alias(score_col),
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc(score_col), F.asc(id_col))
     return (

@@ -26,36 +26,7 @@ from __future__ import annotations
 import re
 
 from qdrant_datafusion_spark.collections import CollectionDescriptor
-
-#: metric → SQL score expression template over (column_expr, query_expr).
-#: These are the INLINE bodies of V_SEARCH / V_DISTANCE (bit-identical
-#: sequential folds), not calls to the registered SQL-defined functions:
-#: Spark 4 rejects SQL UDFs inside Sort, and the corpus writes
-#: ``ORDER BY V_SEARCH(...)`` directly (tests.sql:160).  Inlining keeps
-#: every statement legal in every clause with the identical plan.
-_DOT = (
-    "aggregate(zip_with({c}, {q}, (x, y) -> x * y), "
-    "CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
-)
-_NORM = (
-    "sqrt(aggregate(zip_with({v}, {v}, (x, y) -> x * y), "
-    "CAST(0.0 AS DOUBLE), (a, x) -> a + x))"
-)
-_SCORE_TEMPLATES = {
-    "cosine": (
-        "try_divide(" + _DOT + ", "
-        + _NORM.replace("{v}", "{c}") + " * " + _NORM.replace("{v}", "{q}") + ")"
-    ),
-    "dot": "(" + _DOT + ")",
-    "euclid": (
-        "(-sqrt(aggregate(zip_with({c}, {q}, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0.0 AS DOUBLE), (a, x) -> a + x)))"
-    ),
-    "manhattan": (
-        "(-aggregate(zip_with({c}, {q}, (x, y) -> abs(x - y)), "
-        "CAST(0.0 AS DOUBLE), (a, x) -> a + x))"
-    ),
-}
+from qdrant_datafusion_spark.functions.distance import FOLD, literal_sql, score_sql
 
 #: array literal: ``[`` not preceded by an identifier char / ``]`` / ``)``
 #: (those are indexing) nor a quote (that's JSON text inside a string
@@ -68,27 +39,35 @@ _ARROW_BOOL = re.compile(r"->\s*'(\w+)'\s*=\s*(true|false)\b", re.IGNORECASE)
 _ARROW = re.compile(r"(\w+(?:\.\w+)*)\s*->>?\s*'(\w+)'")
 
 
-#: call forms of the same kernels, used when the query side is a scalar
-#: subquery — Spark forbids subquery expressions inside higher-order
-#: functions, and the SQL-defined function boundary evaluates the argument
-#: first (the by-id search shape, tests.sql:22)
-_CALL_TEMPLATES = {
-    "cosine": "V_SEARCH({c}, {q})",
-    "dot": "(-V_DISTANCE({c}, {q}, 'dot'))",
-    "euclid": "(-V_DISTANCE({c}, {q}, 'euclid'))",
-    "manhattan": "(-V_DISTANCE({c}, {q}, 'manhattan'))",
-}
+#: a literal query vector as the bracket resolution leaves it:
+#: ``array(<number>, ...)`` with plain decimal or exponent numbers
+_NUM = r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?"
+_LITERAL_VEC = re.compile(rf"array\(\s*({_NUM}(?:\s*,\s*{_NUM})*)\s*\)", re.IGNORECASE)
 
 
 def _score_expr(descriptor: CollectionDescriptor, field, query_sql: str) -> str:
+    """The field's metric score of the query, rendered from the kernel
+    table in ``functions.distance``.  These are INLINE bodies, not calls
+    to the registered SQL-defined functions: Spark 4 rejects SQL UDFs
+    inside Sort, and the corpus writes ``ORDER BY V_SEARCH(...)``
+    directly (tests.sql:160).  A literal query becomes DOUBLE constants
+    with its norm folded once (a DECIMAL literal would be cast element
+    by element on every row); a scalar-subquery query calls the
+    registered functions instead, because Spark forbids subquery
+    expressions inside higher-order functions and the function boundary
+    evaluates the argument first (the by-id search shape, tests.sql:22)."""
     col = "vector" if descriptor.unnamed else field.name
-    c = f"CAST({col} AS ARRAY<DOUBLE>)"
-    tpl = (
-        _CALL_TEMPLATES
-        if query_sql.lstrip().upper().startswith("(SELECT")
-        else _SCORE_TEMPLATES
-    )
-    return tpl[field.metric].format(c=c, q=query_sql)
+    metric = field.metric
+    if query_sql.lstrip().upper().startswith("(SELECT"):
+        c = _cast_vec(col)
+        if metric == "cosine":
+            return f"V_SEARCH({c}, {query_sql})"
+        return f"(-V_DISTANCE({c}, {query_sql}, '{metric}'))"
+    m = _LITERAL_VEC.fullmatch(query_sql.strip())
+    if m:
+        q, qn = literal_sql(m.group(1).split(","))
+        return score_sql(metric, col, q, qn=qn)
+    return score_sql(metric, col, query_sql)
 
 
 def _find_call(text: str, name: str, start: int = 0) -> tuple[int, int, str] | None:
@@ -291,7 +270,7 @@ def _dispatch_calls(text: str, name: str, resolve) -> str:
 
 #: inlined score folds are illegal in a Sort (higher-order functions with
 #: outer references / analyzer restrictions) — hoist marker
-_INLINE_SCORE_MARK = "aggregate(zip_with"
+_INLINE_SCORE_MARK = FOLD[: FOLD.index("{")]
 
 
 def _hoist_sort_scores(text: str) -> str:

@@ -744,7 +744,7 @@ def stream_semantic_ingest(
     scale, exactly like the batch operator.  Every shuffle keys on the
     bucket; vectors travel only store→join, never pairwise.
     """
-    from qdrant_datafusion_spark.functions.distance import dot_product, norm
+    from qdrant_datafusion_spark.functions.distance import cosine_similarity
     from qdrant_datafusion_spark.operators.dedup import (
         _make_lsh_bucket_udf,
         auto_bucket_planes,
@@ -785,10 +785,7 @@ def stream_semantic_ingest(
             ).filter(F.col("_v").isNotNull())
         )
         # 2. check against the accepted-history vector store
-        cos = F.try_divide(
-            dot_product(F.col("_v"), F.col("_s_v")),
-            norm(F.col("_v")) * norm(F.col("_s_v")),
-        )
+        cos = cosine_similarity(F.col("_v"), F.col("_s_v"))
         dup_ids = (
             buckets.join(
                 store.select(F.col("_v").alias("_s_v"), "bucket"), "bucket"

@@ -110,7 +110,12 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from qdrant_datafusion_spark.session import get_spark
 
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    # no console progress bar: its carriage-return redraws would glue onto
+    # the PASS/FAIL lines when stdout and stderr share one file
+    spark = get_spark(
+        cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb_con(sf_dir)
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
 

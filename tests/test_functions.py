@@ -28,6 +28,7 @@ from qdrant_datafusion_spark.functions import (
     v_sparse_search,
     v_within,
 )
+from qdrant_datafusion_spark.operators import batch_search, top_k
 
 
 @pytest.fixture(scope="module")
@@ -764,3 +765,199 @@ class TestPmiPhrases:
         out = pmi_phrases(df, "text", min_count=5, top=1).collect()
         # alpha-beta (4 < 5) filtered by the support floor; top=1 slices
         assert [(r["w1"], r["w2"]) for r in out] == [("gamma", "delta")]
+
+
+def _ref_fold(v, q, term):
+    """``aggregate(zip_with(v, q, term), 0.0, a + t)`` in plain Python:
+    NULL for a NULL side or a length mismatch (zip_with pads with NULL),
+    else the element terms added left to right."""
+    if v is None or q is None or len(v) != len(q):
+        return None
+    acc = 0.0
+    for x, y in zip(v, q):
+        acc = acc + term(float(x), float(y))
+    return acc
+
+
+def _ref_kernel(metric, v, q):
+    """Reference raw kernel: cosine similarity, dot, euclid or manhattan
+    distance, each one sequential fold as documented in
+    ``functions.distance.KERNELS``."""
+    if metric == "cosine":
+        dot = _ref_fold(v, q, lambda x, y: x * y)
+        vv, qq = _ref_fold(v, v, lambda x, y: x * y), _ref_fold(q, q, lambda x, y: x * y)
+        if dot is None or vv is None or qq is None:
+            return None
+        den = math.sqrt(vv) * math.sqrt(qq)
+        return None if den == 0.0 else dot / den  # try_divide
+    if metric == "dot":
+        return _ref_fold(v, q, lambda x, y: x * y)
+    if metric == "euclid":
+        s = _ref_fold(v, q, lambda x, y: (x - y) * (x - y))
+        return None if s is None else math.sqrt(s)
+    return _ref_fold(v, q, lambda x, y: abs(x - y))
+
+
+def _ref_score(metric, v, q):
+    k = _ref_kernel(metric, v, q)
+    return k if k is None or metric in ("cosine", "dot") else -k
+
+
+def _ref_distance(metric, v, q):
+    k = _ref_kernel(metric, v, q)
+    if k is None or metric in ("euclid", "manhattan"):
+        return k
+    return 1.0 - k if metric == "cosine" else -k
+
+
+def _bits(x):
+    """Exact identity of a double (NaN included) or NULL."""
+    return None if x is None else float(x).hex()
+
+
+class TestScoreKernelReference:
+    """Every score path renders the one kernel table of
+    ``functions.distance``; each must equal a pure-Python sequential-fold
+    reference bit for bit — the Column API (one ``F.expr`` and the lambda
+    builder), ``top_k``, ``batch_search`` (hoisted norms), corpus SQL
+    (DOUBLE literals, folded query norm) and the registered SQL
+    functions, over the fixture embeddings plus edge rows: a NULL
+    vector, a zero vector (NULL cosine through try_divide) and a shorter
+    vector (NULL through zip_with padding)."""
+
+    METRICS = ("cosine", "dot", "euclid", "manhattan")
+    EDGE = [
+        (-1, None),
+        (-2, [0.0] * 64),
+        (-3, [0.25] * 63),
+        (-4, [1e-30] + [0.0] * 63),
+    ]
+
+    @pytest.fixture(scope="class")
+    def coll(self, spark, sf_dir):
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("v")
+        )
+        edge = spark.createDataFrame(self.EDGE, "id long, v array<float>")
+        df = emb.unionByName(edge).cache()
+        return df, {r.id: r.v for r in df.collect()}
+
+    @staticmethod
+    def _queries():
+        rng = np.random.default_rng(17)
+        q = rng.standard_normal(64).tolist()
+        return {
+            "gauss": q,
+            "zero": [0.0] * 64,
+            "nan": [float("nan")] + q[1:],
+            "inf": [float("inf")] + q[1:],
+        }
+
+    def test_column_api_and_top_k(self, coll):
+        df, vecs = coll
+        for qname, q in self._queries().items():
+            qcol = F.array(*[F.lit(x) for x in q])  # lambda-builder path
+            for m in self.METRICS:
+                rows = df.select(
+                    "id",
+                    v_search("v", q, m).alias("s"),
+                    v_search(F.col("v"), qcol, m).alias("s_col"),
+                    v_distance("v", q, m).alias("d"),
+                    v_distance(F.col("v"), q, m).alias("d_col"),
+                    v_within("v", q, 9.0, m).alias("w"),
+                ).collect()
+                for r in rows:
+                    want = _bits(_ref_score(m, vecs[r.id], q))
+                    assert _bits(r.s) == want, (qname, m, r.id)
+                    assert _bits(r.s_col) == want, (qname, m, r.id)
+                    dist = _ref_distance(m, vecs[r.id], q)
+                    assert _bits(r.d) == _bits(dist) == _bits(r.d_col), (qname, m, r.id)
+                    assert r.w == (None if dist is None else dist < 9.0), (qname, m, r.id)
+        # the NULL / zero / shorter rows reach the NULL cases they name
+        q = self._queries()["gauss"]
+        by = {r.id: r.s for r in df.select("id", v_search("v", q).alias("s")).collect()}
+        assert by[-1] is None and by[-2] is None and by[-3] is None
+        assert by[-4] is not None
+        for m in self.METRICS:
+            got = [(r.id, _bits(r.score)) for r in top_k(df, "v", q, 10, m).collect()]
+            ranked = sorted(
+                ((i, _ref_score(m, v, q)) for i, v in vecs.items()),
+                key=lambda t: (t[1] is None, -(t[1] or 0.0), t[0]),
+            )
+            assert got == [(i, _bits(s)) for i, s in ranked[:10]], m
+
+    def test_batch_search(self, spark, coll):
+        df, vecs = coll
+        qs = list(self._queries().values())
+        queries = spark.createDataFrame(
+            list(enumerate(qs)), "query_id int, query_vec array<double>"
+        )
+        for m in self.METRICS:
+            rows = batch_search(df, queries, "v", 5, m).collect()
+            assert len(rows) == 5 * len(qs), m
+            for r in rows:
+                assert _bits(r.score) == _bits(_ref_score(m, vecs[r.id], qs[r.query_id])), (m, r)
+
+    def test_corpus_sql_and_registered(self, spark, coll):
+        from qdrant_datafusion_spark.collections import CollectionDescriptor, VectorField
+        from qdrant_datafusion_spark.functions import register_all
+        from qdrant_datafusion_spark.sql_dialect import corpus_sql
+
+        df, vecs = coll
+        register_all(spark)
+        names = {m: f"v_{m}" for m in self.METRICS}
+        df.select("id", *[F.col("v").alias(n) for n in names.values()]).createOrReplaceTempView(
+            "_kernel_ref"
+        )
+        desc = CollectionDescriptor(
+            name="_kernel_ref",
+            fields=tuple(VectorField(n, 64, m) for m, n in names.items()),
+        )
+        for qname in ("gauss", "zero"):
+            q = self._queries()[qname]
+            lit = "[" + ", ".join(repr(x) for x in q) + "]"
+            text = "SELECT id, " + ", ".join(
+                f"V_SEARCH('{n}', {lit}) AS {m}" for m, n in names.items()
+            ) + " FROM _kernel_ref"
+            for r in spark.sql(corpus_sql(text, desc, view="_kernel_ref")).collect():
+                for m in self.METRICS:
+                    assert _bits(r[m]) == _bits(_ref_score(m, vecs[r.id], q)), (qname, m, r.id)
+            arr = "array(" + ", ".join(f"{x!r}D" for x in q) + ")"
+            reg = spark.sql(
+                "SELECT id, V_SEARCH(CAST(v_cosine AS ARRAY<DOUBLE>), " + arr + ") AS s, "
+                + ", ".join(
+                    f"V_DISTANCE(CAST(v_cosine AS ARRAY<DOUBLE>), {arr}, '{m}') AS {m}"
+                    for m in self.METRICS
+                )
+                + " FROM _kernel_ref"
+            ).collect()
+            for r in reg:
+                v = vecs[r.id]
+                assert _bits(r.s) == _bits(_ref_kernel("cosine", v, q)), (qname, r.id)
+                for m in self.METRICS:
+                    assert _bits(r[m]) == _bits(_ref_distance(m, v, q)), (qname, m, r.id)
+
+    def test_sparse(self, spark):
+        rows = [
+            ("1", [0, 5], [0.1, 0.9]),
+            ("2", [1, 3], [0.7, 0.4]),
+            ("3", [2], [float("nan")]),
+            ("4", None, None),
+            ("5", [], []),
+            ("6", [3, 0, 7], [1e-8, -2.5, 3.0]),
+        ]
+        df = spark.createDataFrame(rows, "id string, i array<bigint>, v array<float>")
+        vals = {r.id: (r.i, r.v) for r in df.collect()}
+        for query in ({0: 1.0, 5: 2.0, 3: 3.0}, [(7, 0.25), (2, -1.5)], {}):
+            qmap = dict(query)
+            got = df.select(
+                "id",
+                v_sparse_search("i", "v", query).alias("s"),
+                v_sparse_search(F.col("i"), F.col("v"), query).alias("s_col"),
+            ).collect()
+            for r in got:
+                i, v = vals[r.id]
+                want = _ref_fold(
+                    i, v, lambda idx, val: qmap.get(int(idx), 0.0) * val
+                )
+                assert _bits(r.s) == _bits(want) == _bits(r.s_col), (query, r.id)

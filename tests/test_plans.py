@@ -57,6 +57,35 @@ class TestTopKPlan:
         )
         assert has_take_ordered(df)
 
+    def test_literal_query_scores_double_constants(self, spark, sf_dir):
+        """A literal query costs no per-row work of its own: corpus SQL
+        scores DOUBLE constants (a DECIMAL array literal would be cast
+        element by element on every row), and the DataFrame cosine top-k
+        folds twice per row (dot and row norm) — the query norm is folded
+        once when the plan is built."""
+        from qdrant_datafusion_spark.collections import CollectionDescriptor, VectorField
+        from qdrant_datafusion_spark.operators import top_k
+        from qdrant_datafusion_spark.sql_dialect import corpus_sql
+
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        emb.createOrReplaceTempView("_plan_points")
+        q = [0.1 * ((i % 7) - 3) for i in range(64)]
+        desc = CollectionDescriptor(
+            name="_plan_points", fields=(VectorField("embedding", 64, "cosine"),)
+        )
+        text = (
+            "SELECT vec_id, V_SEARCH('embedding', ["
+            + ", ".join(repr(x) for x in q)
+            + "]) AS score FROM _plan_points ORDER BY score DESC LIMIT 5"
+        )
+        df = spark.sql(corpus_sql(text, desc, view="_plan_points"))
+        plan = df._jdf.queryExecution().executedPlan()
+        assert "decimal" not in plan.toJSON().lower()
+        assert has_take_ordered(df)
+
+        top = top_k(emb, "embedding", q, 10, id_col="vec_id")
+        assert top._jdf.queryExecution().executedPlan().toString().count("aggregate(") == 2
+
 
 class TestJoinStrategy:
     def test_small_dim_join_broadcasts(self, spark, sf_dir):
