@@ -123,6 +123,7 @@ def _floor_div_sql(expr: str, d: int) -> str:
 # units — in decimal(38,0) (Spark) / HUGEINT (DuckDB), so both engines
 # produce the same integer at any scale, overflow-free past 10^38.
 
+
 def _avg_round6(units: Column, scale_in: int, out_scale: int = 6) -> Column:
     """round(sum(x)/count(*), out_scale), HALF_UP, exact.  ``units`` =
     per-row bigint units of x at 10**scale_in (the column's exact
@@ -181,6 +182,7 @@ def _ratio6_sql(num_sql: str, den_sql: str) -> str:
 # ---------------------------------------------------------------------------
 # deterministic literal queries (seed 42) shared by Spark + oracle SQL
 # ---------------------------------------------------------------------------
+
 
 def _seeded_vec(dim: int, seed: int) -> list[float]:
     rng = random.Random(seed)

@@ -10,6 +10,7 @@ from qdrant_datafusion_spark.operators.graph import hits, pagerank
 from ._common import gate
 from .vector import _knn_table
 
+
 def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (src, dst) edge projection of the memoized kNN table."""
     return _knn_table(spark, sf_dir).select(

@@ -131,7 +131,6 @@ def multimodal_phash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dHash near-dup image pairs over planted PNG blobs — real encoder,
     real decoder, real banded Hamming join (operators/phash.py)."""
 
-
     # no type annotations: this module's `from __future__ import
     # annotations` would stringify them and break pandas_udf inference
     _make_png = pandas_udf(
@@ -247,7 +246,6 @@ def multimodal_audio_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     PCM parse, exact-integer envelope hash, real banded Hamming join
     (operators/audio.py)."""
 
-
     _make_wav = pandas_udf(
         lambda ids: pd.Series(
             [encode_wav(_audio_planted_samples(int(i))) for i in ids]
@@ -357,7 +355,6 @@ def multimodal_video_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     demux, exact-integer temporal hash, real banded Hamming join
     (operators/video.py)."""
 
-
     _make_y4m = pandas_udf(
         lambda ids: pd.Series(
             [encode_y4m(_video_planted_frames(int(i))) for i in ids]
@@ -421,7 +418,6 @@ def multimodal_cross_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     video.py) over columns of the SAME DataFrame — the fingerprint passes
     are independent narrow maps on their columns, the three banded
     Hamming joins run off one scan, and the flag joins are dup-id-sized."""
-
 
     _png = pandas_udf(
         lambda ids: pd.Series(

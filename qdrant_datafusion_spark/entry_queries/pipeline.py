@@ -5,7 +5,6 @@ family (latest state, SCD2, diffs, apply-changes)."""
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1068,9 +1067,8 @@ def source_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.substring(F.md5(F.expr(_FMT_CANON)), 1, 12), 16, 10
         ).cast("long")
     )
-    tmp = tempfile.mkdtemp(prefix="sg_formats_")
     out_rows = []
-    try:
+    with tempfile.TemporaryDirectory(prefix="sg_formats_") as tmp:
         for fmt in ("orc", "json", "csv"):
             path = os.path.join(tmp, fmt)
             w = docs.write.mode("overwrite").format(fmt)
@@ -1090,8 +1088,6 @@ def source_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 digest.alias("checksum"),
             ).collect()[0]
             out_rows.append((fmt, int(row["n"]), int(row["checksum"])))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         out_rows, "fmt string, n_rows long, checksum long"
     ).orderBy("fmt")

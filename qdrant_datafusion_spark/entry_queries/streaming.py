@@ -6,11 +6,11 @@ batch files for the ingest gates."""
 
 from __future__ import annotations
 
-import glob as _glob
+import glob
 import os
 import shutil
 import tempfile
-import time as _time
+import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -139,6 +139,22 @@ def _read_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     )
 
 
+@contextmanager
+def _scratch_stream(spark: SparkSession, df: DataFrame):
+    """``df`` re-laid-out as 2 parquet files in a scratch dir; yields a
+    ``read()`` that opens them as a stream of one file per micro-batch,
+    so stateful operators must carry state across batches.  The dir is
+    removed on exit: a drained memory sink already holds every row."""
+    with tempfile.TemporaryDirectory(prefix="sg_stream_") as tmp:
+        src = os.path.join(tmp, "src")
+        df.repartition(2).write.parquet(src)
+        yield lambda: (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+
+
 @gate("streaming_hourly_counts", oracle=Q_EVENTS_HOURLY_SQL)
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_events_hourly, graded by the SAME oracle: the
@@ -186,31 +202,18 @@ def streaming_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     per distinct content hash: every hash present in the corpus appears
     exactly once among the survivors, whatever the batch split."""
 
-
-    docs = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="sg_stream_dedup_")
-    src = os.path.join(tmp, "src")
-    docs.repartition(2).write.parquet(src)
-    try:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        kept = stream_dedup_exact(stream, "text")
+    with _scratch_stream(spark, _t(spark, sf_dir, "documents")) as read:
+        kept = stream_dedup_exact(read(), "text")
         sink = _run_stream_to_table(kept, spark, "dedup", "append")
-        # memory sink holds the rows; the temp source is no longer needed
-        survivors = (
-            sink.select(
-                F.md5(F.lower(F.trim(F.col("text")))).alias("content_hash")
-            )
-            .groupBy("content_hash")
-            .agg(F.count("*").cast("long").alias("n_survivors"))
-        )
-        survivors.collect()  # drain before the finally deletes the source
-        return survivors
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _survivor_hashes(sink)
+
+
+def _survivor_hashes(sink: DataFrame) -> DataFrame:
+    return (
+        sink.select(F.md5(F.lower(F.trim(F.col("text")))).alias("content_hash"))
+        .groupBy("content_hash")
+        .agg(F.count("*").cast("long").alias("n_survivors"))
+    )
 
 
 @gate("streaming_dedup_bounded", oracle=STREAMING_DEDUP_SQL)
@@ -229,35 +232,15 @@ def streaming_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-emitted after state aged out; dup dropped within the horizon)
     are pinned by TestStreamDedupBounded in tests/test_streaming.py."""
 
-
-    docs = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="sg_stream_dedup_wm_")
-    src = os.path.join(tmp, "src")
-    docs.repartition(2).write.parquet(src)
-    try:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .withColumn(
-                "_evt", F.timestamp_seconds(F.col("doc_id") + F.lit(10**9))
-            )
+    with _scratch_stream(spark, _t(spark, sf_dir, "documents")) as read:
+        stream = read().withColumn(
+            "_evt", F.timestamp_seconds(F.col("doc_id") + F.lit(10**9))
         )
         kept = stream_dedup_exact(
             stream, "text", watermark_col="_evt", watermark="365 days"
         )
         sink = _run_stream_to_table(kept, spark, "dedup_wm", "append")
-        survivors = (
-            sink.select(
-                F.md5(F.lower(F.trim(F.col("text")))).alias("content_hash")
-            )
-            .groupBy("content_hash")
-            .agg(F.count("*").cast("long").alias("n_survivors"))
-        )
-        survivors.collect()  # drain before the finally deletes the source
-        return survivors
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _survivor_hashes(sink)
 
 
 @gate("streaming_funnel_conversion", oracle=Q_EVENTS_FUNNEL_SQL)
@@ -315,43 +298,30 @@ def streaming_topk_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct emitted rows (every final row was emitted; every emitted
     non-final row is dominated)."""
 
-
     ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    tmp = tempfile.mkdtemp(prefix="sg_stream_topk_")
-    src = os.path.join(tmp, "src")
-    ev.select("event_id", "event_type", "value").repartition(2).write.parquet(
-        src
-    )
-    try:
-        stream = (
-            spark.readStream.schema("event_id long, event_type string, value double")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+    with _scratch_stream(spark, ev.select("event_id", "event_type", "value")) as read:
         upd = streaming_topk(
-            stream, key_col="event_type", id_col="event_id",
+            read(), key_col="event_type", id_col="event_id",
             score_col="value", k=5,
         )
         sink = _run_stream_to_table(upd, spark, "topk", "update")
-        w = Window.partitionBy("event_type").orderBy(
-            F.desc("value"), F.asc("event_id")
+    w = Window.partitionBy("event_type").orderBy(
+        F.desc("value"), F.asc("event_id")
+    )
+    return (
+        sink.select("event_type", "event_id", "value")
+        .dropDuplicates(["event_type", "event_id"])
+        .withColumn("rank", F.row_number().over(w).cast("int"))
+        .where(F.col("rank") <= 5)
+        .select(
+            "event_type",
+            "event_id",
+            F.round("value", 6).alias("value"),
+            "rank",
         )
-        out = (
-            sink.select("event_type", "event_id", "value")
-            .dropDuplicates(["event_type", "event_id"])
-            .withColumn("rank", F.row_number().over(w).cast("int"))
-            .where(F.col("rank") <= 5)
-            .select(
-                "event_type",
-                "event_id",
-                F.round("value", 6).alias("value"),
-                "rank",
-            )
-        )
-        out.collect()  # drain before the finally deletes the source
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+
+
 @gate("streaming_sessions", oracle=Q_EVENTS_SESSIONS_SQL)
 def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_events_sessions, graded by the SAME oracle:
@@ -406,30 +376,23 @@ def streaming_collection_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gate proves the offset/replay plumbing delivers EXACTLY the
     table: per-doc content digest equality against a direct scan."""
 
-
     register_collection_source(spark)
-    docs = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="sg_coll_stream_")
-    coll = os.path.join(tmp, "coll")
-    docs.repartition(4).write.parquet(coll)
-    try:
+    with tempfile.TemporaryDirectory(prefix="sg_coll_stream_") as tmp:
+        coll = os.path.join(tmp, "coll")
+        _t(spark, sf_dir, "documents").repartition(4).write.parquet(coll)
         stream = (
             spark.readStream.format("qdrant_collection")
             .option("path", coll)
             .load()
         )
         sink = _run_stream_to_table(stream, spark, "collsrc", "append")
-        out = sink.select(
-            "doc_id",
-            "lang",
-            "source",
-            F.col("n_chars").cast("long").alias("n_chars"),
-            F.md5(F.col("text")).alias("text_md5"),
-        )
-        out.collect()  # drain before the finally deletes the source
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return sink.select(
+        "doc_id",
+        "lang",
+        "source",
+        F.col("n_chars").cast("long").alias("n_chars"),
+        F.md5(F.col("text")).alias("text_md5"),
+    )
 
 
 # ===========================================================================
@@ -473,7 +436,7 @@ def _staggered_batch_files(
 
     src = os.path.join(tmp, "src")
     os.makedirs(src)
-    base = _time.time() - 3600
+    base = time.time() - 3600
     for i in range(INGEST_BATCHES):
         part_dir = os.path.join(tmp, f"part{i}")
         pred = (
@@ -486,7 +449,7 @@ def _staggered_batch_files(
             .coalesce(1)
             .write.parquet(part_dir)
         )
-        (part_file,) = _glob.glob(os.path.join(part_dir, "part-*.parquet"))
+        (part_file,) = glob.glob(os.path.join(part_dir, "part-*.parquet"))
         dst = os.path.join(src, f"b{i}.parquet")
         shutil.copyfile(part_file, dst)
         os.utime(dst, (base + 60 * i, base + 60 * i))
@@ -508,8 +471,7 @@ def _drain_batches(
     ``path("out")`` — drain it under :func:`_stream_conf`, and return
     ``readback(result)`` pinned before the scratch dir is removed."""
 
-    tmp = tempfile.mkdtemp(prefix="sg_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="sg_ingest_") as tmp:
         stream = (
             spark.readStream.schema(df.schema)
             .option("maxFilesPerTrigger", "1")
@@ -524,8 +486,6 @@ def _drain_batches(
                 raise RuntimeError(f"stream {q.id} did not drain in 600s")
         out = spark.read.parquet(os.path.join(tmp, "out"))
         return readback(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _survivor_batches(id_col: str):
@@ -678,25 +638,14 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever the micro-batch split.  The post-stream estimate/threshold
     math is the batch path on the drained sink table."""
 
-
     raw = _t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="sg_stream_cms_")
-    src = os.path.join(tmp, "src")
-    raw.repartition(2).write.parquet(src)
-    try:
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
+    with _scratch_stream(spark, raw) as read:
         sketch = _run_stream_to_table(
-            cms_build(stream, "user_id", depth=CMS_DEPTH, width=CMS_HH_WIDTH),
+            cms_build(read(), "user_id", depth=CMS_DEPTH, width=CMS_HH_WIDTH),
             spark,
             "cms",
             "complete",
-        ).localCheckpoint(eager=True)  # pin before the temp source vanishes
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        )
     cand = raw.where(F.col("user_id").isNotNull()).select("user_id").distinct()
     est = cms_estimate(
         cand, "user_id", sketch, depth=CMS_DEPTH, width=CMS_HH_WIDTH
@@ -727,7 +676,6 @@ def streaming_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same data, so the drained sketch — and every downstream
     quantile/grading number — is bit-identical to the batch build."""
 
-
     raw = _t(spark, sf_dir, "orders")
     cents_expr = "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
     bounds = (
@@ -738,14 +686,9 @@ def streaming_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()[0]
     )
-    tmp = tempfile.mkdtemp(prefix="sg_stream_hist_")
-    src = os.path.join(tmp, "src")
-    raw.repartition(2).write.parquet(src)
-    try:
+    with _scratch_stream(spark, raw) as read:
         stream = (
-            spark.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+            read()
             .where(F.col("o_totalprice").isNotNull())
             .select(F.expr(cents_expr).alias("c"))
         )
@@ -757,9 +700,7 @@ def streaming_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             "hist",
             "complete",
-        ).localCheckpoint(eager=True)  # pin before the temp source vanishes
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        )
     cents = raw.where(F.col("o_totalprice").isNotNull()).select(
         F.expr(cents_expr).alias("c")
     )
@@ -822,23 +763,10 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever the file split; see streaming/ingest.stream_interval_join
     for the bounded-state production contract."""
 
-
-    ev = _t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="sg_stream_ij_")
-    src = os.path.join(tmp, "src")
-    ev.repartition(2).write.parquet(src)
-    try:
+    with _scratch_stream(spark, _t(spark, sf_dir, "events")) as read:
         def branch(etype: str) -> DataFrame:
-            return (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
-                .filter(F.col("event_type") == etype)
-                .select(
-                    "user_id",
-                    F.col("ts").cast("timestamp").alias("ts"),
-                    "event_id",
-                )
+            return read().filter(F.col("event_type") == etype).select(
+                "user_id", F.col("ts").cast("timestamp").alias("ts"), "event_id"
             )
 
         joined = stream_interval_join(
@@ -852,11 +780,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("lag_s"),
         )
-        sink = _run_stream_to_table(out, spark, "ij", "append")
-        sink.collect()  # drain before the finally deletes the source
-        return sink
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return _run_stream_to_table(out, spark, "ij", "append")
 
 
 @gate("streaming_cdc_apply", oracle=CDC_LATEST_STATE_SQL)

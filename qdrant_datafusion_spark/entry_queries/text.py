@@ -1746,6 +1746,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("label", "pred")
     )
 
+
 @gate("text_quality_pipeline_ml", oracle=TEXT_QUALITY_CLASSIFIER_SQL)
 def text_quality_pipeline_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pyspark.ml Pipeline interop twin of text_quality_classifier
@@ -1758,8 +1759,6 @@ def text_quality_pipeline_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     TEXT_QUALITY_CLASSIFIER_SQL verbatim: the stage is plumbing around
     the identical all-integer kernel (pytest pins fit/transform ==
     library bit-for-bit; ml_interop.py)."""
-
-
 
     docs = _t(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))

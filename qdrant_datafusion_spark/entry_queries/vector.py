@@ -5,7 +5,7 @@ embedding constants the dedup and streaming gates reuse."""
 
 from __future__ import annotations
 
-import json as _json
+import json
 import math
 import re
 
@@ -75,6 +75,7 @@ GEO_TARGET = (48.8566, 2.3522)
 # Vector search surface (SURVEY.md §2.11 — the V_* functions)
 # ===========================================================================
 
+
 def _emb_oracle_prelude() -> str:
     return f"""
 WITH q AS (SELECT {_sql_array(QUERY_VEC)}::DOUBLE[] AS qv)
@@ -122,7 +123,6 @@ def v_search_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     binding (``:qjson`` / ``:k``), not string interpolation — the
     convention for SQL built from runtime values."""
 
-
     register_all(spark)
     _t(spark, sf_dir, "embeddings").createOrReplaceTempView("_udtf_emb")
     return spark.sql(
@@ -133,7 +133,7 @@ def v_search_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY score DESC, vec_id ASC
         LIMIT :k
         """,
-        args={"qjson": _json.dumps(QUERY_VEC), "k": 10},
+        args={"qjson": json.dumps(QUERY_VEC), "k": 10},
     )
 
 
@@ -1419,7 +1419,6 @@ def v_sparse_batch_inverted(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg sum (`sparse_dot_join`) — the inverted-index shape whose
     only shuffle is the final (doc, query) groupBy.  Top-5 per query."""
 
-
     docs = _t(spark, sf_dir, "documents")
     # per-word term counts as flat codegen'd regexp_count columns (the
     # tfidf_rank shape) — a nested transform/filter lambda tree compiles
@@ -1463,7 +1462,6 @@ _JL_IN, _JL_OUT, _JL_SEED = 64, 8, "jl-r3"
 
 
 def _jl_oracle_sql() -> str:
-
 
     signs = jl_sign_matrix(_JL_IN, _JL_OUT, seed=_JL_SEED)
     scale = 1.0 / math.sqrt(_JL_OUT)
