@@ -13,7 +13,7 @@ paths agree bit-for-bit and can share one DuckDB oracle:
    decimal representation — ``Decimal(repr(x))``);
 2. the group mean is the HALF_UP integer division
    ``(2*|sum| + q) // (2*q)`` with ``q = n * 10**(12-6)`` — the
-   ``_avg_round6`` contract (entry_queries.py) at out_scale 6.
+   ``_avg_round6`` contract (entry_queries/_common.py) at out_scale 6.
 
 Scale note: a grouped-agg pandas UDF materializes each full group on
 one worker (no partial aggregation), so at 100 TB the PRODUCTION path

@@ -100,10 +100,10 @@ def score_sql(metric: str, v: str, q: str, **norms) -> str:
     return k if KERNELS[metric][2] else f"(-{k})"
 
 
-def distance_sql(metric: str, v: str, q: str) -> str:
+def distance_sql(metric: str, v: str, q: str, **norms) -> str:
     """Lower-is-closer distance text: cosine is 1 - similarity, dot is
     negated."""
-    k = kernel_sql(metric, v, q)
+    k = kernel_sql(metric, v, q, **norms)
     if metric == "cosine":
         return f"(1.0D - {k})"
     return f"(-{k})" if metric == "dot" else k

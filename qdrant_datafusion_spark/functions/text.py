@@ -167,24 +167,6 @@ def doc_fingerprint(text: ColumnOrName, k: int = 3) -> Column:
     )
 
 
-def minhash_signature(
-    text: ColumnOrName, k: int = 3, num_hashes: int = 32
-) -> Column:
-    """MinHash signature as array<string>: for seed i, min over shingles of
-    md5(i || ':' || shingle).  md5 keeps it oracle-checkable; at production
-    scale swap ``F.md5`` for ``F.xxhash64`` (same structure, ~3× faster)."""
-    sh = word_shingles(text, k)
-
-    def min_hash(i: int) -> Column:
-        # closure factory: an `i=i` default would make the lambda binary and
-        # Spark would pass the element index as i
-        return F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{i}:"), s)))
-        )
-
-    return F.array(*[min_hash(i) for i in range(num_hashes)])
-
-
 def vocab_stats(df, text_col: str, id_col: str, top_n: int = 25):
     """Corpus vocabulary: top-``top_n`` tokens by total term frequency with
     document frequency — the tokenizer-building / corpus-profiling stage of

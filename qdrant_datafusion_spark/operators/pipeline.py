@@ -28,7 +28,7 @@ remaining assembly stages a 100 TB corpus pipeline needs:
                          and the 100 TB knob is simply more buckets.
 
 Everything except the per-bucket packing loop is native Column code; all
-four operators have exact DuckDB oracles (see entry_queries).
+four operators have exact DuckDB oracles (see entry_queries/pipeline.py).
 """
 
 from __future__ import annotations

@@ -164,19 +164,6 @@ def fan_out(df, *key_cols: str, min_parts: int | None = None, parts: int | None 
     return df.repartition(target, *key_cols)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register the driver's parquet tables as temp views named after the files."""
-    if names is None:
-        names = [
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        ]
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
-
-
 class Pins:
     """Frames pinned in one scope and released together.
 

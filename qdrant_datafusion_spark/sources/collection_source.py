@@ -28,7 +28,6 @@ the local file read, with everything else unchanged.
 from __future__ import annotations
 
 import glob
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -281,11 +280,3 @@ class CollectionStreamReader(SimpleDataSourceStreamReader):
 def register_collection_source(spark) -> None:
     """Register the format on a session (once per session)."""
     spark.dataSource.register(CollectionDataSource)
-
-
-def _descriptor_json_for(path: str) -> str | None:
-    f = os.path.join(path, DESCRIPTOR_FILE)
-    if os.path.exists(f):
-        with open(f) as fh:
-            return json.dumps(json.loads(fh.read()))
-    return None

@@ -26,7 +26,13 @@ from __future__ import annotations
 import re
 
 from qdrant_datafusion_spark.collections import CollectionDescriptor
-from qdrant_datafusion_spark.functions.distance import FOLD, literal_sql, score_sql
+from qdrant_datafusion_spark.functions.distance import (
+    DENSE_METRICS,
+    FOLD,
+    distance_sql,
+    literal_sql,
+    score_sql,
+)
 
 #: array literal: ``[`` not preceded by an identifier char / ``]`` / ``)``
 #: (those are indexing) nor a quote (that's JSON text inside a string
@@ -43,6 +49,13 @@ _ARROW = re.compile(r"(\w+(?:\.\w+)*)\s*->>?\s*'(\w+)'")
 #: ``array(<number>, ...)`` with plain decimal or exponent numbers
 _NUM = r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?"
 _LITERAL_VEC = re.compile(rf"array\(\s*({_NUM}(?:\s*,\s*{_NUM})*)\s*\)", re.IGNORECASE)
+
+
+def _literal_query(query_sql: str) -> tuple[str, str] | None:
+    """(DOUBLE constants, folded norm literal) of a literal query
+    vector; None for any other query expression."""
+    m = _LITERAL_VEC.fullmatch(query_sql.strip())
+    return literal_sql(m.group(1).split(",")) if m else None
 
 
 def _score_expr(descriptor: CollectionDescriptor, field, query_sql: str) -> str:
@@ -63,9 +76,9 @@ def _score_expr(descriptor: CollectionDescriptor, field, query_sql: str) -> str:
         if metric == "cosine":
             return f"V_SEARCH({c}, {query_sql})"
         return f"(-V_DISTANCE({c}, {query_sql}, '{metric}'))"
-    m = _LITERAL_VEC.fullmatch(query_sql.strip())
-    if m:
-        q, qn = literal_sql(m.group(1).split(","))
+    lit = _literal_query(query_sql)
+    if lit:
+        q, qn = lit
         return score_sql(metric, col, q, qn=qn)
     return score_sql(metric, col, query_sql)
 
@@ -403,15 +416,26 @@ def corpus_sql(
             return _score_expr(descriptor, default_field, args[0])
         return None  # already-resolved (column, query) form
 
+    # V_DISTANCE / V_WITHIN with a literal query render the kernel inline,
+    # as _score_expr does: the registered functions take the query as a
+    # parameter, so its norm would be folded again on every row
     def distance(args):  # V_DISTANCE([..], 'metric') — v is implicit
-        if len(args) == 2:
-            return f"V_DISTANCE({default_vec}, {args[0]}, {args[1]})"
-        return None
+        if len(args) != 2:
+            return None
+        lit, metric = _literal_query(args[0]), _quoted(args[1])
+        if lit and metric in DENSE_METRICS:
+            q, qn = lit
+            return distance_sql(metric, default_col, q, qn=qn)
+        return f"V_DISTANCE({default_vec}, {args[0]}, {args[1]})"
 
     def within(args):  # V_WITHIN([..], r) — v is implicit
-        if len(args) == 2:
-            return f"V_WITHIN({default_vec}, CAST({args[0]} AS ARRAY<DOUBLE>), {args[1]})"
-        return None
+        if len(args) != 2:
+            return None
+        lit = _literal_query(args[0])
+        if lit:
+            dist = distance_sql("euclid", default_col, lit[0])
+            return f"({dist} < CAST({args[1]} AS DOUBLE))"
+        return f"V_WITHIN({default_vec}, CAST({args[0]} AS ARRAY<DOUBLE>), {args[1]})"
 
     def sparse_search(args):  # ([idx], [vals]) or ('field', [idx], [vals])
         q = _quoted(args[0]) if args else None

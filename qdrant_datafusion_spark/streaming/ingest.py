@@ -225,7 +225,7 @@ def sessionized_counts(
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Per-user session aggregation via ``session_window`` (the streaming
-    sibling of the batch lag+cumsum sessionization in entry_queries)."""
+    sibling of the batch lag+cumsum sessionization in entry_queries/events.py)."""
     return (
         events.withWatermark(ts_col, watermark)
         .groupBy(F.session_window(ts_col, gap).alias("w"), user_col)

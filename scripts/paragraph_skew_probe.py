@@ -74,7 +74,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from bench import _ensure_sf1
-    from qdrant_datafusion_spark.entry_queries import (
+    from qdrant_datafusion_spark.entry_queries.dedup import (
         PARA_W,
         _word_windows,
     )

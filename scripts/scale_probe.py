@@ -151,7 +151,7 @@ def _dedup_semantic_autok(spark, sf_dir: str):
 
     from pyspark.sql import functions as F
 
-    from qdrant_datafusion_spark.entry_queries import _seeded_vec
+    from qdrant_datafusion_spark.entry_queries._common import _seeded_vec
     from qdrant_datafusion_spark.operators.dedup import semantic_dedup
 
     emb = (
@@ -178,7 +178,7 @@ def _dedup_substring_salted(spark, sf_dir: str):
 
     from pyspark.sql import functions as F
 
-    from qdrant_datafusion_spark.entry_queries import _ratio_round6
+    from qdrant_datafusion_spark.entry_queries._common import _ratio_round6
     from qdrant_datafusion_spark.operators.dedup import substring_dup_spans
 
     salted = os.path.join(sf_dir, "documents_salted.parquet")
@@ -385,7 +385,8 @@ def _layout_zorder_probe(spark, sf_dir: str):
     this probes the path a 100 TB write would actually take."""
     from pyspark.sql import functions as F
 
-    from qdrant_datafusion_spark.entry_queries import _DAY_NS, _events, _floor_div
+    from qdrant_datafusion_spark.entry_queries._common import _events, _floor_div
+    from qdrant_datafusion_spark.entry_queries.sketch import _DAY_NS
     from qdrant_datafusion_spark.operators.layout import zorder_layout
 
     base = (
@@ -523,7 +524,8 @@ def _layout_hilbert_probe(spark, sf_dir: str):
     repartitionByRange — the Hilbert twin of _layout_zorder_probe."""
     from pyspark.sql import functions as F
 
-    from qdrant_datafusion_spark.entry_queries import _DAY_NS, _events, _floor_div
+    from qdrant_datafusion_spark.entry_queries._common import _events, _floor_div
+    from qdrant_datafusion_spark.entry_queries.sketch import _DAY_NS
     from qdrant_datafusion_spark.operators.layout import hilbert_key
 
     base = (

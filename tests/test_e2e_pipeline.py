@@ -46,7 +46,7 @@ SEM_CENTROIDS_SEEDS = range(60, 68)
 
 
 def run_pipeline(spark, sf_dir):
-    from qdrant_datafusion_spark.entry_queries import _seeded_vec
+    from qdrant_datafusion_spark.entry_queries._common import _seeded_vec
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -129,7 +129,7 @@ def run_pipeline(spark, sf_dir):
     #      REWRITE survivors (aligned-unit boilerplate the span flag
     #      above only measures).  Units are 4-word windows because the
     #      synthetic corpus is single-line (the gate's segmentation).
-    from qdrant_datafusion_spark.entry_queries import _word_windows
+    from qdrant_datafusion_spark.entry_queries.dedup import _word_windows
 
     paras = paragraph_dedup_global(
         span_kept, id_col="doc_id", units=_word_windows(F.col("text"), 4)

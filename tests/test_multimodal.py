@@ -291,7 +291,7 @@ class TestCrossModalDups:
     families composed over one mixed media table."""
 
     def test_flags_compose_and_match_per_modality_pairs(self, spark, sf_dir):
-        from qdrant_datafusion_spark.entry_queries import (
+        from qdrant_datafusion_spark.entry_queries.multimodal import (
             AUDIO_FRAME,
             AUDIO_MAX_HAMMING,
             CROSS_DOC_CAP,
@@ -312,7 +312,7 @@ class TestCrossModalDups:
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
 
-        from qdrant_datafusion_spark.entry_queries import (
+        from qdrant_datafusion_spark.entry_queries.multimodal import (
             _audio_planted_samples,
         )
         from qdrant_datafusion_spark.operators.audio import (

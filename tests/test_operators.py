@@ -319,13 +319,13 @@ class TestDedup:
 
     def test_plane_count_sql_parity(self):
         """The gates' DuckDB oracles recompute p in SQL
-        (entry_queries._EMB_LSH_P_SQL); the formula must agree with
+        (entry_queries/vector.py _EMB_LSH_P_SQL); the formula must agree with
         dedup.auto_plane_count for every corpus size — including the
         floor, the pool cap, and exact powers of two at the ceil
         boundary."""
         import duckdb
 
-        from qdrant_datafusion_spark.entry_queries import EMB_LSH_PMAX
+        from qdrant_datafusion_spark.entry_queries.vector import EMB_LSH_PMAX
         from qdrant_datafusion_spark.operators.dedup import auto_plane_count
 
         con = duckdb.connect()
@@ -343,7 +343,7 @@ class TestDedup:
         [t*PMAX + j]) so truncating the PMAX-bit bucket string to p
         reproduces the p-plane buckets exactly — the invariant the
         substr() in the oracles depends on."""
-        from qdrant_datafusion_spark.entry_queries import (
+        from qdrant_datafusion_spark.entry_queries.vector import (
             EMB_LSH_PMAX,
             EMB_LSH_POOL,
             EMB_LSH_TABLES,
@@ -379,7 +379,7 @@ class TestDedup:
         planes_a, _ = auto_bucket_planes(8_000, 64)
         planes_b, _ = auto_bucket_planes(8_000, 64)
         assert planes_a == planes_b
-        from qdrant_datafusion_spark.entry_queries import EMB_LSH_PLANES
+        from qdrant_datafusion_spark.entry_queries.vector import EMB_LSH_PLANES
 
         assert planes_a == EMB_LSH_PLANES
 
@@ -2055,7 +2055,7 @@ class TestVideoTemporalDups:
 
 
 class TestFloorDivBucketing:
-    """entry_queries._floor_div — engine-identical bucketing for ANY
+    """entry_queries._common._floor_div — engine-identical bucketing for ANY
     timestamp sign (round-6 verdict task #6: pre-1970 ts used to
     silently diverge between Spark `div` and DuckDB `//`)."""
 
@@ -2067,7 +2067,7 @@ class TestFloorDivBucketing:
     def test_matches_duckdb_floor_form(self, spark):
         import duckdb
 
-        from qdrant_datafusion_spark.entry_queries import (
+        from qdrant_datafusion_spark.entry_queries._common import (
             _floor_div,
             _floor_div_sql,
         )
@@ -2118,7 +2118,7 @@ class TestFloorDivBucketing:
         }
 
     def test_python_floor_semantics(self, spark):
-        from qdrant_datafusion_spark.entry_queries import _floor_div
+        from qdrant_datafusion_spark.entry_queries._common import _floor_div
 
         df = spark.createDataFrame([(t,) for t in self.TS], "ts long")
         got = [

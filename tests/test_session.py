@@ -80,9 +80,9 @@ class TestSessionScaleConfigs:
             # boilerplate-skew fixture: 2x n_docs rows of one constant
             # string, consumed ONLY by signature builders that fan_out
             # before the shingle walk (verified round 13)
-            ("entry_queries.py", "_skew_fixture"),
+            ("entry_queries/dedup.py", "_skew_fixture"),
             # 63-row literal bucket table feeding a broadcast join
-            ("entry_queries.py", "q_range_bucket_join"),
+            ("entry_queries/relational.py", "q_range_bucket_join"),
         }
         new_sites = found - allowed
         assert not new_sites, (
@@ -153,7 +153,8 @@ class TestSharedBuild:
         assert released == []
 
     def test_another_sessions_entry_is_never_served(self, spark, sf_dir):
-        from qdrant_datafusion_spark import entry_queries as eq
+        from qdrant_datafusion_spark.entry_queries._common import _t
+        from qdrant_datafusion_spark.entry_queries.dedup import _skew_fixture
         from qdrant_datafusion_spark.session import shared_build
 
         other, mine = spark.newSession(), spark.newSession()
@@ -161,8 +162,8 @@ class TestSharedBuild:
         assert shared_build(mine, "k", lambda pin: "mine") == "mine"
         # the skew fixture's document count, first counted by another session
         shared_build(other, ("n_docs", sf_dir), lambda pin: -1)
-        _, boiler, n_docs = eq._skew_fixture(mine, sf_dir)
-        assert n_docs == eq._t(mine, sf_dir, "documents").count() > 0
+        _, boiler, n_docs = _skew_fixture(mine, sf_dir)
+        assert n_docs == _t(mine, sf_dir, "documents").count() > 0
         assert boiler.count() == 2 * n_docs
 
     def test_same_session_builds_once(self, spark):
@@ -179,10 +180,11 @@ class TestSharedBuild:
         assert calls == [1]
 
     def test_session_change_releases_the_old_pins(self, spark, sf_dir):
-        from qdrant_datafusion_spark import entry_queries as eq
+        from qdrant_datafusion_spark.entry_queries.dedup import _doc_minhash_buckets
+        from qdrant_datafusion_spark.entry_queries.vector import _knn_table
 
         def pinned_rdds(session):
-            tables = (eq._doc_minhash_buckets, eq._knn_table)
+            tables = (_doc_minhash_buckets, _knn_table)
             return {t(session, sf_dir)._jdf.logicalPlan().rdd().id() for t in tables}
 
         first = pinned_rdds(spark.newSession())
@@ -192,10 +194,10 @@ class TestSharedBuild:
         assert (first | second) & persisted == second
 
     def test_results_survive_session_switches(self, spark, sf_dir):
-        from qdrant_datafusion_spark import entry_queries as eq
+        from qdrant_datafusion_spark.entry_queries.dedup import dedup_minhash
 
         def rows(session):
-            return sorted(eq.dedup_minhash(session, sf_dir).collect())
+            return sorted(dedup_minhash(session, sf_dir).collect())
 
         before = rows(spark)
         assert before

@@ -978,7 +978,7 @@ class TestStaggeredBatchFiles:
         import glob
         import os
 
-        from qdrant_datafusion_spark.entry_queries import (
+        from qdrant_datafusion_spark.entry_queries.streaming import (
             INGEST_BATCHES,
             _staggered_batch_files,
         )
