@@ -59,7 +59,7 @@ _RUN_FIRST = (
     "ann_knn_graph_blocked", "cdc_apply_changes",
     "cdc_scd2_apply_changes", "cdc_table_diff", "dedup_containment",
 )
-_rest = {k: fn for k, fn in QUERIES.items() if k not in _RUN_FIRST}
-_head = {k: QUERIES[k] for k in _RUN_FIRST}  # KeyError: a name not registered
+_order = [*_RUN_FIRST, *(k for k in QUERIES if k not in _RUN_FIRST)]
+_ordered = {k: QUERIES[k] for k in _order}  # KeyError: a name not registered
 QUERIES.clear()
-QUERIES.update(_head, **_rest)
+QUERIES.update(_ordered)

@@ -180,7 +180,7 @@ def _ratio6_sql(num_sql: str, den_sql: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# deterministic literal queries (seed 42) shared by Spark + oracle SQL
+# seeded literal vectors and their DuckDB array text (Spark + oracle SQL)
 # ---------------------------------------------------------------------------
 
 

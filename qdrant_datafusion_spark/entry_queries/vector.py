@@ -57,6 +57,7 @@ from qdrant_datafusion_spark.session import shared_build
 from ._common import _avg6_sql, _avg_round6, _seeded_vec, _sql_array, _t, gate
 from .text import _TOKS_SQL
 
+#: deterministic literal queries shared by the gates and their oracles
 QUERY_VEC = _seeded_vec(64, 42)
 #: sparse "query": fixed vocabulary words with weights (documents are
 #: word-soup over a small vocab, see TESTDATA.md)
