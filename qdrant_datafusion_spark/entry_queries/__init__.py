@@ -31,7 +31,7 @@ from . import (  # noqa: F401  (importing a family registers its gates)
 )
 from ._common import ORACLES, QUERIES
 
-# names outside the registry that the driver entry point and bench.py import
+# names __spark_entry__.entry and bench.py import from the package itself
 from .vector import EMB_LSH_P, EMB_LSH_TABLES, v_fusion_hybrid  # noqa: F401
 
 # The driver's correctness file keeps the first 50 registry rows, so these
