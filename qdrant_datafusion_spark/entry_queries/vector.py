@@ -894,7 +894,7 @@ def lsh_bucket_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: 16 tables × 4 hyperplanes (seeds 200..263) — measured 0.96 pair recall
 #: at threshold 0.35 on the test corpus.  Kept as the reference constant
-#: for auto_bucket_planes' determinism test; the gates below use the
+#: for auto_bucket_planes' determinism test; the LSH gates use the
 #: corpus-scaled POOL instead (round-9 verdict #4).
 EMB_LSH_TABLES = 16
 EMB_LSH_P = 4
