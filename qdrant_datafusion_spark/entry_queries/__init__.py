@@ -1,12 +1,12 @@
-"""The driver-contract query inventory: every implemented operator from
+"""The gate inventory behind ``__spark_entry__``: every implemented operator from
 SURVEY.md §2 (plus the training-data-pipeline extensions) as a
-(spark_query, duckdb_oracle_sql) pair over the driver's parquet tables.
+(spark_query, duckdb_oracle_sql) pair over the fixture parquet tables.
 
 Each family module binds its gates with ``@gate("key", oracle=SQL)``
 (:mod:`._common`); importing this package imports every family, so
 :data:`QUERIES` and :data:`ORACLES` hold the full inventory.
 
-Determinism rules (the driver hash-compares values):
+Determinism rules (results are hash-compared against the oracle):
 - every float output is ``round(x, N)`` on BOTH sides (money sums N=2,
   unit-scale scores N=6) — identical decimal → identical double bits;
 - every top-k orders by (score, id) so ties cannot reorder row *sets*;
@@ -34,9 +34,9 @@ from ._common import ORACLES, QUERIES
 # names __spark_entry__.entry and bench.py import from the package itself
 from .vector import EMB_LSH_P, EMB_LSH_TABLES, v_fusion_hybrid  # noqa: F401
 
-# The driver's correctness file keeps the first 50 registry rows, so these
-# lead: the newest gates, then the gates with the oldest driver evidence.
-# Every gate still passes its oracle in the local sweeps whatever its slot.
+# These lead the registry order, for a correctness run that records only
+# its first 50 rows: the newest gates, then those whose recorded evidence
+# is oldest.  Every gate passes its oracle whatever its slot.
 _RUN_FIRST = (
     "dedup_embedding_brp", "text_quality_pipeline_ml",
     "pipeline_group_split", "dedup_source_overlap",

@@ -1,4 +1,4 @@
-"""What every gate module shares: the registry the driver contract reads
+"""What every gate module shares: the registry ``__spark_entry__`` reads
 (:data:`QUERIES`, :data:`ORACLES`, filled by :func:`gate`), the fixture
 readers, and the Spark/DuckDB twin helpers whose two halves must agree
 bit for bit (each Spark helper sits next to its DuckDB text twin)."""
@@ -55,7 +55,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     nanoseconds (long), whatever the file's physical timestamp type —
     deterministic and identical to DuckDB's epoch_ns().
 
-    Two generations of driver testdata exist: TIMESTAMP(NANOS) (which
+    Two generations of fixture testdata exist: TIMESTAMP(NANOS) (which
     Spark's vectorized reader only accepts as long via the
     ``nanosAsLong`` conf) and TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ).
     All downstream time arithmetic is integer-ns, so both normalize here.

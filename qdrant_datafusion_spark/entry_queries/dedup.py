@@ -529,7 +529,7 @@ def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Capped (100 TB-default) dedup gates — skewed boilerplate fixture
 # ===========================================================================
 #
-# The driver-gated dedup_minhash / dedup_simhash run UNCAPPED so the exact
+# The oracle-gated dedup_minhash / dedup_simhash run UNCAPPED so the exact
 # pair oracle can model the complete-recall contract.  These gates prove
 # the production skew guard itself (``max_bucket_size`` — the default every
 # 100 TB run keeps): a synthetic hot key — 2·n_docs identical copies of a

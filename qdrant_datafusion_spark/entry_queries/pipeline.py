@@ -556,7 +556,7 @@ def pipeline_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round 9 session 4 — CDC / data-platform state management: changelog →
+# CDC / data-platform state management: changelog →
 # snapshot (MERGE-INTO "latest wins"), changelog → SCD Type-2 history,
 # snapshot ↔ snapshot audit diff.  The maintain-don't-rebuild half of a
 # 100 TB corpus; see operators/cdc.py for the one-shuffle designs.
@@ -704,7 +704,7 @@ def cdc_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     list, unchanged rows dropped.  ONE full-outer key join, verdicts a
     pure projection; see cdc.table_diff.  The library operator returns
     `changed_cols` as a typed array<string>; the gate flattens it to a
-    sorted comma-joined string because the driver's pandas canonicalizer
+    sorted comma-joined string because the correctness check's pandas canonicalizer
     cannot hash list cells (round-9 red row)."""
 
     orders = _t(spark, sf_dir, "orders")

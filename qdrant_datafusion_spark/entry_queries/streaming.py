@@ -77,8 +77,8 @@ from .vector import (
 # constraint.
 # ===========================================================================
 
-#: per-session monotonic suffix so repeated gate invocations (driver runs
-#: the query, then may re-run it) never collide on a memory-sink name
+#: per-session monotonic suffix so repeated gate invocations (a gate may
+#: run more than once per session) never collide on a memory-sink name
 _STREAM_SEQ = [0]
 
 
@@ -129,7 +129,7 @@ def _run_stream_to_table(
 
 def _read_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     schema = _t(spark, sf_dir, table).schema  # footer-only batch read
-    # the streaming file source only accepts a DIRECTORY; the driver lays
+    # the streaming file source only accepts a DIRECTORY; the fixtures lay
     # each table out as a single file, so stream the sf dir with a glob
     # filter selecting just that table's file
     return (

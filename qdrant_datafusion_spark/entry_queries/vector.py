@@ -1320,7 +1320,7 @@ def group_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output is LONG-FORM ``(label, pos, m, n)`` — one row per centroid
     dimension, scalar columns only.  (The r4 wide form carried the
-    centroid as ``array<double>``, which the driver's pandas sort
+    centroid as ``array<double>``, which the correctness check's pandas sort
     canonicalization cannot order — "unhashable type: 'list'" — so the
     only value-correct red row in CORRECTNESS_r04 was a shape artifact.
     Reassemble with ``array_sort(collect_list(struct(pos, m)))`` when a
