@@ -124,11 +124,13 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds 1.2× the mean.  Wide sketch (4096) so collisions are rare
     and the set tracks the exact hot keys; CMS overestimate-only means
     zero false negatives by construction."""
+    return _cms_hot_users(_events(spark, sf_dir))
 
-    ev = _events(spark, sf_dir)
+
+def _cms_hot_users(ev: DataFrame, sketch: DataFrame | None = None) -> DataFrame:
     return cms_heavy_hitters(
         ev, "user_id", depth=CMS_DEPTH, width=CMS_HH_WIDTH,
-        num=SKEW_NUM, den=SKEW_DEN,
+        num=SKEW_NUM, den=SKEW_DEN, sketch=sketch,
     ).select(
         "user_id", F.col("est").alias("est_count")
     ).orderBy(F.desc("est_count"), "user_id")
@@ -635,15 +637,33 @@ def sketch_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on ≤ 256 rows, and the verification is two conditional counts.
     """
 
-    orders = _t(spark, sf_dir, "orders")
-    cents = orders.where(F.col("o_totalprice").isNotNull()).select(
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").alias("c")
+    cents = _order_cents(_t(spark, sf_dir, "orders"))
+    return _verified_quantiles(cents, hist_build(cents, "c", HIST_BUCKETS))
+
+
+#: o_totalprice as fixed-point cents, the histogram gates' value column
+_CENTS = "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
+
+
+def _order_cents(orders: DataFrame) -> DataFrame:
+    return orders.where(F.col("o_totalprice").isNotNull()).select(
+        F.expr(_CENTS).alias("c")
     )
+
+
+def _cents_bounds(cents: DataFrame) -> tuple[int, int]:
+    row = cents.agg(F.min("c"), F.max("c")).collect()[0]
+    return int(row[0]), int(row[1])
+
+
+def _verified_quantiles(cents: DataFrame, sketch: DataFrame) -> DataFrame:
+    """The quantile walk over ``sketch`` with, per quantile, the exact
+    counts of ``cents.c`` below and up to its claimed bucket."""
     # qs feeds the grading cross-join AND the final select; it is 3
-    # rows — pin it once so orders is not re-scanned per consumer
-    qs = hist_quantiles(
-        hist_build(cents, "c", HIST_BUCKETS), HIST_BUCKETS, list(HIST_QS)
-    ).localCheckpoint(eager=False)
+    # rows — pin it once so the source is not re-scanned per consumer
+    qs = hist_quantiles(sketch, HIST_BUCKETS, list(HIST_QS)).localCheckpoint(
+        eager=False
+    )
     ver = (
         cents.crossJoin(
             F.broadcast(qs.select("q_micro", "rank_r", "b_lo", "b_hi"))
@@ -769,29 +789,12 @@ def sketch_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass over the NEW slice only."""
 
     orders = _t(spark, sf_dir, "orders")
-    cents_expr = "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
-    bounds = (
-        orders.where(F.col("o_totalprice").isNotNull())
-        .agg(
-            F.min(F.expr(cents_expr)).alias("lo"),
-            F.max(F.expr(cents_expr)).alias("hi"),
-        )
-        .collect()[0]
-    )
-    lo, hi = int(bounds["lo"]), int(bounds["hi"])
+    lo, hi = _cents_bounds(_order_cents(orders))
     a = orders.where(F.col("o_orderpriority") == "1-URGENT")
     b = orders.where(F.col("o_orderpriority") == "5-LOW")
 
     def _hist(side: DataFrame) -> DataFrame:
-        return hist_build(
-            side.where(F.col("o_totalprice").isNotNull()).select(
-                F.expr(cents_expr).alias("c")
-            ),
-            "c",
-            DRIFT_BUCKETS,
-            lo=lo,
-            hi=hi,
-        )
+        return hist_build(_order_cents(side), "c", DRIFT_BUCKETS, lo=lo, hi=hi)
 
     ha = _hist(a).select("b", F.col("cnt").alias("ca"))
     hb = _hist(b).select("b", F.col("cnt").alias("cb"))

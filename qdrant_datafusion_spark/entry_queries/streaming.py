@@ -16,12 +16,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from qdrant_datafusion_spark.operators.sketch import (
-    cms_build,
-    cms_estimate,
-    hist_build,
-    hist_quantiles,
-)
+from qdrant_datafusion_spark.operators.sketch import cms_build, hist_build
 from qdrant_datafusion_spark.sources.collection_source import register_collection_source
 from qdrant_datafusion_spark.streaming.ingest import (
     sessionized_counts,
@@ -49,11 +44,12 @@ from .sketch import (
     CMS_DEPTH,
     CMS_HH_WIDTH,
     HIST_BUCKETS,
-    HIST_QS,
     SKETCH_CMS_HEAVY_HITTERS_SQL,
     SKETCH_HIST_QUANTILES_SQL,
-    SKEW_DEN,
-    SKEW_NUM,
+    _cents_bounds,
+    _cms_hot_users,
+    _order_cents,
+    _verified_quantiles,
 )
 from .text import _TOKS_SQL
 from .vector import (
@@ -646,21 +642,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cms",
             "complete",
         )
-    cand = raw.where(F.col("user_id").isNotNull()).select("user_id").distinct()
-    est = cms_estimate(
-        cand, "user_id", sketch, depth=CMS_DEPTH, width=CMS_HH_WIDTH
-    )
-    total = sketch.where(F.col("d") == 0).agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("_total")
-    )
-    nk = cand.agg(F.count("*").cast("bigint").alias("_nk"))
-    return (
-        est.crossJoin(F.broadcast(total))
-        .crossJoin(F.broadcast(nk))
-        .where(F.col("est") * F.col("_nk") * SKEW_DEN > SKEW_NUM * F.col("_total"))
-        .select("user_id", F.col("est").cast("bigint").alias("est_count"))
-        .orderBy(F.desc("est_count"), "user_id")
-    )
+    return _cms_hot_users(raw, sketch)
 
 
 @gate("streaming_hist_quantiles", oracle=SKETCH_HIST_QUANTILES_SQL)
@@ -677,69 +659,16 @@ def streaming_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile/grading number — is bit-identical to the batch build."""
 
     raw = _t(spark, sf_dir, "orders")
-    cents_expr = "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
-    bounds = (
-        raw.where(F.col("o_totalprice").isNotNull())
-        .agg(
-            F.min(F.expr(cents_expr)).alias("lo"),
-            F.max(F.expr(cents_expr)).alias("hi"),
-        )
-        .collect()[0]
-    )
+    cents = _order_cents(raw)
+    lo, hi = _cents_bounds(cents)
     with _scratch_stream(spark, raw) as read:
-        stream = (
-            read()
-            .where(F.col("o_totalprice").isNotNull())
-            .select(F.expr(cents_expr).alias("c"))
-        )
         sketch = _run_stream_to_table(
-            hist_build(
-                stream, "c", HIST_BUCKETS,
-                lo=int(bounds["lo"]), hi=int(bounds["hi"]),
-            ),
+            hist_build(_order_cents(read()), "c", HIST_BUCKETS, lo=lo, hi=hi),
             spark,
             "hist",
             "complete",
         )
-    cents = raw.where(F.col("o_totalprice").isNotNull()).select(
-        F.expr(cents_expr).alias("c")
-    )
-    qs = hist_quantiles(sketch, HIST_BUCKETS, list(HIST_QS)).localCheckpoint(
-        eager=False
-    )
-    ver = (
-        cents.crossJoin(
-            F.broadcast(qs.select("q_micro", "rank_r", "b_lo", "b_hi"))
-        )
-        .groupBy("q_micro", "rank_r", "b_lo", "b_hi")
-        .agg(
-            F.sum(F.when(F.col("c") < F.col("b_lo"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_lt_blo"),
-            F.sum(F.when(F.col("c") <= F.col("b_hi"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_le_bhi"),
-        )
-    )
-    return (
-        qs.join(ver, ["q_micro", "rank_r", "b_lo", "b_hi"])
-        .select(
-            F.col("q_micro").cast("bigint").alias("q_micro"),
-            "n_total",
-            "rank_r",
-            "bucket",
-            "b_lo",
-            "b_hi",
-            "est",
-            "n_lt_blo",
-            "n_le_bhi",
-            (
-                (F.col("n_lt_blo") < F.col("rank_r"))
-                & (F.col("rank_r") <= F.col("n_le_bhi"))
-            ).alias("contains_rank"),
-        )
-        .orderBy("q_micro")
-    )
+    return _verified_quantiles(cents, sketch)
 
 
 STREAMING_INTERVAL_JOIN_SQL = """

@@ -156,12 +156,15 @@ def cms_heavy_hitters(
     width: int = 1024,
     num: int = 2,
     den: int = 1,
+    sketch: DataFrame | None = None,
 ) -> DataFrame:
     """Keys whose *estimated* count exceeds ``num/den`` × the mean
     per-key count, from one data pass (the sketch build) plus one
     distinct over keys.  Because CMS only overestimates, every true
     heavy hitter is in the output (no false negatives); collisions can
-    add false positives, shrinking with width.
+    add false positives, shrinking with width.  Pass ``sketch`` when
+    ``df``'s sketch was built elsewhere, e.g. drained from a stream
+    (cells add, so it equals the batch build).
 
     The stream total is read back off the sketch itself (sum of the
     d=0 row counts — each depth lane sums to the stream length), so no
@@ -169,7 +172,8 @@ def cms_heavy_hitters(
     1-row aggregate on the candidate set.  Threshold comparison is the
     integer cross-multiplication ``est · n_keys · den > num · total``.
     """
-    sketch = cms_build(df, key_col, depth, width)
+    if sketch is None:
+        sketch = cms_build(df, key_col, depth, width)
     cand = df.where(F.col(key_col).isNotNull()).select(key_col).distinct()
     est = cms_estimate(cand, key_col, sketch, depth, width)
     total = sketch.where(F.col("d") == 0).agg(
