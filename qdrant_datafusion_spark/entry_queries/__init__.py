@@ -59,6 +59,7 @@ _RUN_FIRST = (
     "ann_knn_graph_blocked", "cdc_apply_changes",
     "cdc_scd2_apply_changes", "cdc_table_diff", "dedup_containment",
 )
+assert len(set(_RUN_FIRST)) == len(_RUN_FIRST) == 50, len(_RUN_FIRST)
 _order = [*_RUN_FIRST, *(k for k in QUERIES if k not in _RUN_FIRST)]
 _ordered = {k: QUERIES[k] for k in _order}  # KeyError: a name not registered
 QUERIES.clear()

@@ -28,8 +28,8 @@ def gate(key: str, oracle: str) -> Callable[[Gate], Gate]:
     def register(fn: Gate) -> Gate:
         if key in QUERIES:
             raise ValueError(f"gate {key!r} registered twice")
-        QUERIES.update({key: fn})
-        ORACLES.update({key: oracle})
+        QUERIES[key] = fn
+        ORACLES[key] = oracle
         return fn
 
     return register

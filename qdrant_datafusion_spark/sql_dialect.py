@@ -416,8 +416,8 @@ def corpus_sql(
             return _score_expr(descriptor, default_field, args[0])
         return None  # already-resolved (column, query) form
 
-    # V_DISTANCE / V_WITHIN with a literal query render the kernel inline,
-    # as _score_expr does: the registered functions take the query as a
+    # V_DISTANCE with a literal query renders the kernel inline, as
+    # _score_expr does: the registered function takes the query as a
     # parameter, so its norm would be folded again on every row
     def distance(args):  # V_DISTANCE([..], 'metric') — v is implicit
         if len(args) != 2:
@@ -429,13 +429,9 @@ def corpus_sql(
         return f"V_DISTANCE({default_vec}, {args[0]}, {args[1]})"
 
     def within(args):  # V_WITHIN([..], r) — v is implicit
-        if len(args) != 2:
-            return None
-        lit = _literal_query(args[0])
-        if lit:
-            dist = distance_sql("euclid", default_col, lit[0])
-            return f"({dist} < CAST({args[1]} AS DOUBLE))"
-        return f"V_WITHIN({default_vec}, CAST({args[0]} AS ARRAY<DOUBLE>), {args[1]})"
+        if len(args) == 2:
+            return f"V_WITHIN({default_vec}, CAST({args[0]} AS ARRAY<DOUBLE>), {args[1]})"
+        return None
 
     def sparse_search(args):  # ([idx], [vals]) or ('field', [idx], [vals])
         q = _quoted(args[0]) if args else None

@@ -86,11 +86,11 @@ class TestTopKPlan:
         top = top_k(emb, "embedding", q, 10, id_col="vec_id")
         assert top._jdf.queryExecution().executedPlan().toString().count("aggregate(") == 2
 
-    def test_literal_distance_and_within_fold_the_query_once(self, spark, sf_dir):
-        """Corpus ``V_DISTANCE`` / ``V_WITHIN`` with a literal query render
-        the kernel inline: the cosine distance folds twice per row (dot and
-        row norm) where the registered function folds three times, and
-        both paths return the same bits."""
+    def test_literal_distance_folds_the_query_once(self, spark, sf_dir):
+        """Corpus ``V_DISTANCE`` with a literal query renders the kernel
+        inline: the cosine distance folds twice per row (dot and row
+        norm) where the registered function folds three times, and both
+        paths return the same bits."""
         from qdrant_datafusion_spark.collections import CollectionDescriptor, VectorField
         from qdrant_datafusion_spark.functions import register_all
         from qdrant_datafusion_spark.sql_dialect import corpus_sql
@@ -105,21 +105,16 @@ class TestTopKPlan:
         )
         lit = ", ".join(repr(x) for x in q)
         inline = spark.sql(corpus_sql(
-            f"SELECT vec_id, V_DISTANCE([{lit}], 'cosine') AS d, "
-            f"V_WITHIN([{lit}], 1.9) AS w FROM _plan_points",
+            f"SELECT vec_id, V_DISTANCE([{lit}], 'cosine') AS d FROM _plan_points",
             desc, view="_plan_points",
         ))
-        vec = "CAST(embedding AS ARRAY<DOUBLE>)"
         called = spark.sql(
-            f"SELECT vec_id, V_DISTANCE({vec}, array({lit}), 'cosine') AS d, "
-            f"V_WITHIN({vec}, CAST(array({lit}) AS ARRAY<DOUBLE>), 1.9) AS w "
-            "FROM _plan_points"
+            f"SELECT vec_id, V_DISTANCE(CAST(embedding AS ARRAY<DOUBLE>), "
+            f"array({lit}), 'cosine') AS d FROM _plan_points"
         )
-        rows = sorted(inline.collect())
-        assert rows == sorted(called.collect())
-        assert {r.w for r in rows} == {True, False}
-        folds = inline.select("d")._jdf.queryExecution().executedPlan().toString()
-        assert folds.count("aggregate(") == 2
+        assert sorted(inline.collect()) == sorted(called.collect())
+        plan = inline._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("aggregate(") == 2
 
 
 class TestJoinStrategy:
