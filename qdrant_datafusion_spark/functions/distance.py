@@ -47,15 +47,14 @@ _PROD = f"{_X} * {_Y}"
 #: metric -> (element term, what the summed terms ``{s}`` become, higher
 #: is better).  The kernel text of every score in the engine: the Column
 #: API (:func:`v_search` and friends, ``sparse.v_sparse_search``), the
-#: corpus SQL resolver (``sql_dialect``) and the registered ``V_SEARCH``
-#: / ``V_DISTANCE`` / ``V_WITHIN`` bodies (``registry``) all render from
-#: this table, so every path folds in the same order and agrees bit for
-#: bit.  Cosine takes the norms as ``{vn}`` / ``{qn}``: a literal's norm
-#: is folded once in Python (:func:`literal_norm`), a hoisted norm is a
-#: column, anything else is the :func:`norm_sql` fold.  try_divide: a
-#: zero vector yields NULL, not an ANSI divide-by-zero error.  The sparse
-#: dot folds a row's indices (``{v}``) and values (``{q}``) against a
-#: literal query map ``{m}``.
+#: corpus SQL resolver (``sql_dialect``) and every registered V_* score
+#: body (``registry``) render from this table, so every path folds in
+#: the same order and agrees bit for bit.  Cosine takes the norms as
+#: ``{vn}`` / ``{qn}``: a literal's norm is folded once in Python
+#: (:func:`literal_norm`), a hoisted norm is a column, anything else is
+#: the :func:`norm_sql` fold.  try_divide: a zero vector yields NULL, not
+#: an ANSI divide-by-zero error.  The sparse dot folds a row's indices
+#: (``{v}``) and values (``{q}``) against a query map ``{m}``.
 KERNELS = {
     "cosine": (_PROD, "try_divide({s}, {vn} * {qn})", True),
     "dot": (_PROD, "{s}", True),
@@ -68,6 +67,13 @@ KERNELS = {
     ),
 }
 DENSE_METRICS = ("cosine", "dot", "euclid", "manhattan")
+
+#: ColBERT MaxSim over a multi-vector ``{mv}`` and a query multi-vector
+#: ``{q}``: each query sub-vector's best ``dot`` kernel ``{dot}`` over the
+#: document's sub-vectors, summed left to right.  The text of both
+#: ``multivector.v_colbert`` and the registered ``V_COLBERT``.  An empty
+#: or NULL document makes ``array_max`` NULL, so the score is NULL.
+MAXSIM = "aggregate({q}, 0D, (acc, qv) -> acc + array_max(transform({mv}, d -> {dot})))"
 
 
 def norm_sql(v: str) -> str:
@@ -92,6 +98,11 @@ def kernel_sql(
         vn=vn if vn is not None else norm_sql(v),
         qn=qn if qn is not None else norm_sql(q),
     )
+
+
+def maxsim_sql(mv: str, q: str) -> str:
+    """:data:`MAXSIM` as SQL text."""
+    return MAXSIM.format(mv=mv, q=q, dot=kernel_sql("dot", "d", "qv"))
 
 
 def score_sql(metric: str, v: str, q: str, **norms) -> str:

@@ -50,3 +50,22 @@ def has_take_ordered(df: DataFrame) -> bool:
 
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df)
+
+
+def stage_totals(spark, **metrics: str) -> dict[str, int]:
+    """Each named ``StageData`` metric (``shuffle_write_bytes=
+    "shuffleWriteBytes"``) summed over every completed stage of this
+    application so far.  Reads the driver's status store directly, so it
+    works with the Spark UI off and never depends on which port a UI
+    bound."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()  # type: ignore[attr-defined]
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)  # type: ignore[attr-defined]
+    stages = store.stageList(None, False, False, no_quantiles, None)
+    tot = dict.fromkeys(metrics, 0)
+    for i in range(stages.size()):
+        s = stages.apply(i)
+        if s.status().toString() == "COMPLETE":
+            for k, getter in metrics.items():
+                tot[k] += getattr(s, getter)()
+    return tot

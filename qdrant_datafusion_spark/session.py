@@ -68,14 +68,11 @@ def get_spark(
         # ~1.8s at 8).  1 slice is the correct count for a 1-row relation
         # at ANY cluster size — more cores make the serial slice walk
         # strictly worse, so this is not a local-mode tune; RDD-API work
-        # that wants full parallelism can override via
-        # $SPARK_GRAFT_DEFAULT_PARALLELISM (the engine's own query paths
-        # are DataFrame-API and size their stages from the scan/shuffle
-        # configs and session.fan_out, not this).
-        .config(
-            "spark.default.parallelism",
-            os.environ.get("SPARK_GRAFT_DEFAULT_PARALLELISM", "1"),
-        )
+        # that wants full parallelism can override it through
+        # ``extra_conf`` (the engine's own query paths are DataFrame-API
+        # and size their stages from the scan/shuffle configs and
+        # session.fan_out, not this).
+        .config("spark.default.parallelism", "1")
         # AQE's coalescePartitions floor silently derives from
         # defaultParallelism when minPartitionNum is unset
         # (CoalesceShufflePartitions falls back to
@@ -108,12 +105,9 @@ def get_spark(
         # Byte-based coalescing of the tiniest stages is the right
         # default; operators whose SMALL shuffles feed CPU-heavy kernels
         # spread explicitly (session.fan_out / keyed repartition), which
-        # AQE does not coalesce.  Env knob for deployments that want the
-        # floor to bind anyway:
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"),
-        )
+        # AQE does not coalesce.  Deployments that want the floor to bind
+        # anyway set it through ``extra_conf``:
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -13,9 +13,10 @@ records per batch:
 - wall seconds of the drain (includes a constant ~stream-startup term,
   identical every batch, so GROWTH is what the column measures);
 - the store's row count entering the batch;
-- REST-API deltas of cumulative input bytes/records and shuffle
-  read/write (the store re-read and the bucket-join exchange are the
-  two candidate linear terms — this separates them).
+- deltas of cumulative input bytes/records and shuffle read/write,
+  read from the driver's status store (the store re-read and the
+  bucket-join exchange are the two candidate linear terms — this
+  separates them).
 
 Claim under test: per-batch wall must be bounded by the BATCH's work,
 with the store contributing only its bucket-pruned probe — i.e. late
@@ -34,7 +35,6 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -43,21 +43,13 @@ VECS_PER_BATCH = 1000
 DIM = 64
 
 
-def _rest_totals(app_id: str) -> dict[str, int]:
-    url = (
-        f"http://localhost:4040/api/v1/applications/{app_id}"
-        "/stages?status=complete"
-    )
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {"input_bytes": 0, "input_records": 0,
-           "shuffle_read_records": 0, "shuffle_write_records": 0}
-    for s in stages:
-        tot["input_bytes"] += s.get("inputBytes", 0)
-        tot["input_records"] += s.get("inputRecords", 0)
-        tot["shuffle_read_records"] += s.get("shuffleReadRecords", 0)
-        tot["shuffle_write_records"] += s.get("shuffleWriteRecords", 0)
-    return tot
+#: the per-batch stage metrics diffed around each drain
+_TOTALS = {
+    "input_bytes": "inputBytes",
+    "input_records": "inputRecords",
+    "shuffle_read_records": "shuffleReadRecords",
+    "shuffle_write_records": "shuffleWriteRecords",
+}
 
 
 def _doc_batch(spark, b: int):
@@ -85,12 +77,12 @@ def _vec_batch(spark, b: int):
 
 
 def _drive(spark, kind: str, n_batches: int) -> list[dict]:
+    from qdrant_datafusion_spark.plans.inspect import stage_totals
     from qdrant_datafusion_spark.streaming.ingest import (
         stream_near_dup_ingest,
         stream_semantic_ingest,
     )
 
-    app_id = spark.sparkContext.applicationId
     root = tempfile.mkdtemp(prefix=f"ingest_growth_{kind}_")
     src = os.path.join(root, "src")
     store = os.path.join(root, "store")
@@ -106,7 +98,7 @@ def _drive(spark, kind: str, n_batches: int) -> list[dict]:
                 store_rows = spark.read.parquet(store).count()
             except Exception:
                 store_rows = 0
-            before = _rest_totals(app_id)
+            before = stage_totals(spark, **_TOTALS)
             t0 = time.time()
             if kind == "near":
                 q = stream_near_dup_ingest(
@@ -123,7 +115,7 @@ def _drive(spark, kind: str, n_batches: int) -> list[dict]:
                 )
             assert q.awaitTermination(600)
             wall = round(time.time() - t0, 3)
-            after = _rest_totals(app_id)
+            after = stage_totals(spark, **_TOTALS)
             rows.append(
                 {
                     "batch": b,
@@ -168,10 +160,7 @@ def main() -> None:
 
     from qdrant_datafusion_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="ingest-growth-probe",
-        extra_conf={"spark.ui.enabled": "true"},
-    )
+    spark = get_spark(app_name="ingest-growth-probe")
     spark.conf.set("spark.sql.streaming.schemaInference", "false")
     result: dict = {"n_batches": n_batches,
                     "docs_per_batch": DOCS_PER_BATCH,

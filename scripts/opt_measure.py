@@ -28,12 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def main() -> None:
     argv = sys.argv[1:]
     plans_suffix = None
@@ -55,20 +49,17 @@ def main() -> None:
             names.append(argv[i])
             i += 1
 
+    from bench import _control
     from qdrant_datafusion_spark.entry_queries import QUERIES
+    from qdrant_datafusion_spark.plans.inspect import explain_str
     from qdrant_datafusion_spark.session import get_spark
 
     spark = get_spark(app_name="opt-measure")
-    # same warmup shape as bench.py so numbers are comparable
+    # bench.py's warm-up, so numbers are comparable: footers, then six
+    # untimed runs of its control query
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    from pyspark.sql import functions as F
-
-    for _ in range(4):
-        (
-            spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-            .agg(F.count("*"), F.sum("l_extendedprice"), F.avg("l_quantity"))
-            .collect()
-        )
+    for _ in range(6):
+        _control(spark, sf_dir)
 
     plans_dir = os.path.join(REPO, "plans", "r14")
     os.makedirs(plans_dir, exist_ok=True)
@@ -98,7 +89,7 @@ def main() -> None:
                 with open(
                     os.path.join(plans_dir, f"{name}_{plans_suffix}.txt"), "w"
                 ) as f:
-                    f.write(plan_of(df))
+                    f.write(explain_str(df))
             except Exception as e:  # streaming plans need a started query
                 with open(
                     os.path.join(plans_dir, f"{name}_{plans_suffix}.txt"), "w"

@@ -20,8 +20,8 @@ Evidence recorded (appended to SCALE_PROBE.md by hand after a run):
 - measured skew geometry (distinct hashes, share of occurrences in the
   hot 1%);
 - REAL exchange sizes per run (shuffle write/read bytes + records),
-  read from the Spark REST API (the probe enables the UI) by diffing
-  cumulative stage metrics around each timed run;
+  read from the driver's status store by diffing cumulative stage
+  metrics around each timed run;
 - the no-combine counterfactual: exchange records if every occurrence
   row had shuffled.
 
@@ -35,7 +35,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -48,23 +47,13 @@ _BOILER = [
 ]
 
 
-def _rest_stage_totals(app_id: str) -> dict[str, int]:
-    """Cumulative shuffle totals across all completed stages so far."""
-    url = f"http://localhost:4040/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    tot = {
-        "shuffle_write_bytes": 0,
-        "shuffle_write_records": 0,
-        "shuffle_read_bytes": 0,
-        "shuffle_read_records": 0,
-    }
-    for s in stages:
-        tot["shuffle_write_bytes"] += s.get("shuffleWriteBytes", 0)
-        tot["shuffle_write_records"] += s.get("shuffleWriteRecords", 0)
-        tot["shuffle_read_bytes"] += s.get("shuffleReadBytes", 0)
-        tot["shuffle_read_records"] += s.get("shuffleReadRecords", 0)
-    return tot
+#: the exchange metrics diffed around each timed run
+_EXCHANGE = {
+    "shuffle_write_bytes": "shuffleWriteBytes",
+    "shuffle_write_records": "shuffleWriteRecords",
+    "shuffle_read_bytes": "shuffleReadBytes",
+    "shuffle_read_records": "shuffleReadRecords",
+}
 
 
 def main() -> None:
@@ -79,13 +68,10 @@ def main() -> None:
         _word_windows,
     )
     from qdrant_datafusion_spark.operators.dedup import paragraph_dedup_global
+    from qdrant_datafusion_spark.plans.inspect import stage_totals
     from qdrant_datafusion_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="paragraph-skew-probe",
-        extra_conf={"spark.ui.enabled": "true"},
-    )
-    app_id = spark.sparkContext.applicationId
+    spark = get_spark(app_name="paragraph-skew-probe")
 
     scaled_dir, gen_sec = _ensure_sf1(spark, base_dir, replicas=replicas)
     docs100 = spark.read.parquet(
@@ -130,13 +116,13 @@ def main() -> None:
     ).collect()[0]
 
     def timed(df, label: str):
-        before = _rest_stage_totals(app_id)
+        before = stage_totals(spark, **_EXCHANGE)
         t0 = time.time()
         n = paragraph_dedup_global(
             df, id_col="doc_id", units=_word_windows(F.col("text"), PARA_W)
         ).count()
         wall = round(time.time() - t0, 3)
-        after = _rest_stage_totals(app_id)
+        after = stage_totals(spark, **_EXCHANGE)
         ex = {k: after[k] - before[k] for k in after}
         print(f"# {label}: {wall}s rows={n} exchange={ex}", file=sys.stderr)
         return wall, n, ex

@@ -29,12 +29,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def audit(plan: str) -> dict:
     # count the "(N) NodeName" detail headers so each physical node counts
     # once (the tree rendering repeats every node name)
@@ -349,6 +343,7 @@ def main() -> None:
     only = set(sys.argv[2:])
 
     from qdrant_datafusion_spark.entry_queries import QUERIES
+    from qdrant_datafusion_spark.plans.inspect import explain_str
     from qdrant_datafusion_spark.session import get_spark
 
     spark = get_spark(app_name="plan-audit", cores=4)
@@ -368,7 +363,7 @@ def main() -> None:
             continue
         try:
             df = fn(spark, sf_dir)
-            p = plan_of(df)
+            p = explain_str(df)
         except Exception as exc:  # pragma: no cover - audit tool
             flags.append(f"- **{name}**: failed to plan: {exc}")
             continue

@@ -17,24 +17,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf1_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".scale_cache",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_x10v3",
-    )
-    from pyspark.sql import functions as F
-
+    from bench import _control, _ensure_sf1
     from qdrant_datafusion_spark.entry_queries import QUERIES
     from qdrant_datafusion_spark.session import get_spark
 
     spark = get_spark(app_name="sf1-probe")
+    sf1_dir, _ = _ensure_sf1(spark, sf_dir)
+    # bench.py's warm-up: footers, then six untimed control runs
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    for _ in range(4):
-        (
-            spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-            .agg(F.count("*"), F.sum("l_extendedprice"), F.avg("l_quantity"))
-            .collect()
-        )
+    for _ in range(6):
+        _control(spark, sf_dir)
     for name in names:
         spark.sparkContext.setJobDescription(f"sf1probe:{name}")
         t0 = time.time()

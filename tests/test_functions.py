@@ -598,80 +598,6 @@ class TestVariantJson:
         assert r.s_absent is False and r.v_absent is False
 
 
-class TestVectorizedRegistryKernels:
-    """The SQL-fallback pandas-UDF kernels are batch-vectorized (no
-    per-element Python loops on the hot path); these pin their semantics
-    directly on pandas inputs, including the paths Spark rarely hits."""
-
-    def test_dense_batch_grouped_dims_and_nulls(self):
-        import numpy as np
-        import pandas as pd
-
-        from qdrant_datafusion_spark.functions.registry import (
-            _cosine_kernel,
-            _dense_batch,
-        )
-
-        v = pd.Series([[1.0, 0.0], None, [1.0, 2.0, 2.0], [0.0, 0.0]])
-        q = pd.Series([[1.0, 0.0], [1.0], [2.0, 4.0, 4.0], [1.0, 0.0]])
-        got = _dense_batch(v, q, _cosine_kernel)
-        assert got[0] == pytest.approx(1.0)
-        assert np.isnan(got[1])  # NULL input
-        assert got[2] == pytest.approx(1.0)  # second dim-group
-        assert np.isnan(got[3])  # zero vector
-
-    def test_sparse_flat_path_matches_reference_sum(self):
-        import pandas as pd
-
-        from qdrant_datafusion_spark.functions.registry import _sparse_batch
-
-        ind = pd.Series([[0, 5], [1, 3], [], None])
-        val = pd.Series([[0.1, 0.9], [0.7, 0.4], [], None])
-        qind = pd.Series([[5, 7], [1, 3], [2], [0]])
-        qval = pd.Series([[2.0, 1.0], [1.0, 1.0], [1.0], [1.0]])
-        got = _sparse_batch(ind, val, qind, qval)
-        assert got[0] == pytest.approx(0.9 * 2.0)
-        assert got[1] == pytest.approx(0.7 + 0.4)
-        assert got[2] == pytest.approx(0.0)  # empty postings
-        assert pd.isna(got[3])
-
-    def test_sparse_big_index_fallback_agrees(self):
-        import pandas as pd
-
-        from qdrant_datafusion_spark.functions.registry import _sparse_batch
-
-        huge = 1 << 40  # beyond the combined-key range -> per-row fallback
-        ind = pd.Series([[huge, 2], [0, 1]])
-        val = pd.Series([[3.0, 1.0], [1.0, 1.0]])
-        qind = pd.Series([[huge], [1]])
-        qval = pd.Series([[2.0], [5.0]])
-        got = _sparse_batch(ind, val, qind, qval)
-        assert got[0] == pytest.approx(6.0)
-        assert got[1] == pytest.approx(5.0)
-
-    def test_maxsim_common_query_fast_path_matches_per_row(self):
-        import numpy as np
-        import pandas as pd
-
-        from qdrant_datafusion_spark.functions.registry import _maxsim_batch
-
-        rng = np.random.default_rng(3)
-        q = [[float(x) for x in rng.standard_normal(4)] for _ in range(2)]
-        docs = [
-            [[float(x) for x in rng.standard_normal(4)] for _ in range(k)]
-            for k in (1, 3, 2)
-        ]
-        shared = _maxsim_batch(pd.Series(docs), pd.Series([q, q, q]))
-        mixed_q = [q, q, [q[0]]]  # one row diverges -> per-row path
-        per_row = _maxsim_batch(pd.Series(docs), pd.Series(mixed_q))
-        for i in range(2):  # rows with the same query agree across paths
-            assert shared[i] == pytest.approx(per_row[i])
-        expected0 = sum(
-            max(np.dot(qi, d) for d in docs[0]) for qi in np.asarray(q)
-        )
-        assert shared[0] == pytest.approx(expected0)
-
-
 class TestTextCleaning:
     PLANTED = [
         (1, "contact bob.smith+x@corp.example.com or call +1 (415) 555-0123 now"),
@@ -923,21 +849,26 @@ class TestScoreKernelReference:
                 for m in self.METRICS:
                     assert _bits(r[m]) == _bits(_ref_score(m, vecs[r.id], q)), (qname, m, r.id)
             arr = "array(" + ", ".join(f"{x!r}D" for x in q) + ")"
+            vcol = "CAST(v_cosine AS ARRAY<DOUBLE>)"
+            kernels = {"V_SEARCH": "cosine", "V_COSINE": "cosine", "V_DOT": "dot", "V_EUCLID": "euclid"}
             reg = spark.sql(
-                "SELECT id, V_SEARCH(CAST(v_cosine AS ARRAY<DOUBLE>), " + arr + ") AS s, "
-                + ", ".join(
-                    f"V_DISTANCE(CAST(v_cosine AS ARRAY<DOUBLE>), {arr}, '{m}') AS {m}"
-                    for m in self.METRICS
-                )
+                "SELECT id, "
+                + ", ".join(f"{f}({vcol}, {arr}) AS {f}" for f in kernels)
+                + ", "
+                + ", ".join(f"V_DISTANCE({vcol}, {arr}, '{m}') AS {m}" for m in self.METRICS)
                 + " FROM _kernel_ref"
             ).collect()
             for r in reg:
                 v = vecs[r.id]
-                assert _bits(r.s) == _bits(_ref_kernel("cosine", v, q)), (qname, r.id)
+                for f, m in kernels.items():
+                    assert _bits(r[f]) == _bits(_ref_kernel(m, v, q)), (qname, f, r.id)
                 for m in self.METRICS:
                     assert _bits(r[m]) == _bits(_ref_distance(m, v, q)), (qname, m, r.id)
 
     def test_sparse(self, spark):
+        from qdrant_datafusion_spark.functions import register_all
+
+        big = 1 << 40  # an index past 2^31
         rows = [
             ("1", [0, 5], [0.1, 0.9]),
             ("2", [1, 3], [0.7, 0.4]),
@@ -945,11 +876,21 @@ class TestScoreKernelReference:
             ("4", None, None),
             ("5", [], []),
             ("6", [3, 0, 7], [1e-8, -2.5, 3.0]),
+            ("7", [big, 2], [3.0, 1.0]),
         ]
         df = spark.createDataFrame(rows, "id string, i array<bigint>, v array<float>")
+        df.createOrReplaceTempView("_sparse_ref")
+        register_all(spark)
         vals = {r.id: (r.i, r.v) for r in df.collect()}
-        for query in ({0: 1.0, 5: 2.0, 3: 3.0}, [(7, 0.25), (2, -1.5)], {}):
+        for query in ({0: 1.0, 5: 2.0, 3: 3.0}, [(7, 0.25), (2, -1.5)], [(big, 2.0), (5, 0.5)], {}):
             qmap = dict(query)
+            qi = ", ".join(f"{i}L" for i in qmap)
+            qv = ", ".join(f"{x!r}D" for x in qmap.values())
+            sql = spark.sql(
+                f"SELECT id, V_SPARSE_SEARCH(i, v, CAST(array({qi}) AS ARRAY<BIGINT>), "
+                f"CAST(array({qv}) AS ARRAY<DOUBLE>)) AS s FROM _sparse_ref"
+            )
+            by_sql = {r.id: r.s for r in sql.collect()}
             got = df.select(
                 "id",
                 v_sparse_search("i", "v", query).alias("s"),
@@ -961,3 +902,64 @@ class TestScoreKernelReference:
                     i, v, lambda idx, val: qmap.get(int(idx), 0.0) * val
                 )
                 assert _bits(r.s) == _bits(want) == _bits(r.s_col), (query, r.id)
+                assert _bits(by_sql[r.id]) == _bits(want), (query, r.id)
+            assert by_sql["4"] is None and by_sql["5"] == 0.0
+        # a NULL query scores NULL, like a NULL row
+        nulls = spark.sql(
+            "SELECT V_SPARSE_SEARCH(i, v, NULL, NULL) AS s FROM _sparse_ref"
+        ).collect()
+        assert {r.s for r in nulls} == {None}
+
+    @staticmethod
+    def _ref_maxsim(doc, q):
+        """MaxSim as the sequential fold of ``functions.distance.MAXSIM``:
+        per query sub-vector the best non-NULL dot (``array_max`` skips
+        NULLs), added left to right from 0.0; a NULL or empty document, or
+        one with no sub-vector of the query's length, is NULL."""
+        if doc is None:
+            return None
+        acc = 0.0
+        for qv in q:
+            dots = [_ref_fold(d, qv, lambda x, y: x * y) for d in doc]
+            dots = [s for s in dots if s is not None]
+            if not dots:
+                return None
+            acc = acc + max(dots)
+        return acc
+
+    def test_colbert(self, spark):
+        from qdrant_datafusion_spark.functions import register_all
+
+        rng = np.random.default_rng(29)
+
+        def vec(n=4):
+            return [float(x) for x in rng.standard_normal(n)]
+
+        rows = [
+            ("1", [vec()]),
+            ("2", [vec(), vec(), vec()]),
+            ("3", [vec(), vec()]),
+            ("4", None),
+            ("5", []),
+            ("6", [vec(3)]),  # no sub-vector of the query's length
+            ("7", [vec(3), vec()]),
+        ]
+        df = spark.createDataFrame(rows, "id string, mv array<array<float>>")
+        df.createOrReplaceTempView("_colbert_ref")
+        register_all(spark)
+        docs = {r.id: r.mv for r in df.collect()}
+        for q in ([vec()], [vec(), vec()]):
+            lit = "array(" + ", ".join(
+                "array(" + ", ".join(f"{x!r}D" for x in qv) + ")" for qv in q
+            ) + ")"
+            by_sql = {
+                r.id: r.s
+                for r in spark.sql(
+                    f"SELECT id, V_COLBERT(mv, {lit}) AS s FROM _colbert_ref"
+                ).collect()
+            }
+            for r in df.select("id", v_colbert("mv", q).alias("s")).collect():
+                want = _bits(self._ref_maxsim(docs[r.id], q))
+                assert _bits(r.s) == _bits(by_sql[r.id]) == want, (len(q), r.id)
+            assert by_sql["4"] is None and by_sql["5"] is None and by_sql["6"] is None
+            assert by_sql["7"] is not None

@@ -23,12 +23,8 @@ class TestSessionScaleConfigs:
 
     def test_default_parallelism_stays_one_for_local_relations(self, spark):
         # the ML-writer fix: 1 slice for driver-local parallelize /
-        # createDataFrame relations (overridable via
-        # $SPARK_GRAFT_DEFAULT_PARALLELISM, untouched in tests)
-        import os
-
-        expected = int(os.environ.get("SPARK_GRAFT_DEFAULT_PARALLELISM", "1"))
-        assert spark.sparkContext.defaultParallelism == expected
+        # createDataFrame relations
+        assert spark.sparkContext.defaultParallelism == 1
 
     def test_default_parallelism_one_rdd_relation_allowlist(self):
         # Guard for the global default.parallelism=1 knob (r13 VERDICT
